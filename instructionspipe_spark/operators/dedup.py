@@ -52,6 +52,12 @@ from pyspark.sql import types as T
 
 from instructionspipe_spark.functions.text import char_ngrams, shingle_normalize
 from instructionspipe_spark.functions.vectors import cosine_similarity
+from instructionspipe_spark.operators.similarity import (  # noqa: F401  (the cell bound is re-exported)
+    _FLAT_ASSIGN_MAX_CELLS,
+    _coarse_assign,
+    _seed_centroids,
+    _trained_centroids,
+)
 
 
 def exact_dedup(df: DataFrame, keys: list[str], tiebreak: list[str]) -> DataFrame:
@@ -106,16 +112,6 @@ DEFAULT_BUCKET_CAP = 64
 #: to 71+. Same constant-not-quantile rule as :data:`DEFAULT_BUCKET_CAP`.
 DEFAULT_EVAL_BUCKET_CAP = 8
 
-#: Largest ``n_cells`` at which :func:`semantic_dedup`'s default routing
-#: stays FLAT. Flat assignment is O(n * k) dots — the operator's only
-#: superlinear term once cells scale with the corpus (r10 probe: alpha
-#: 1.16 -> 1.56); two-level routing is O(n * sqrt(k)) but pays a
-#: super-centroid stage that only amortizes at large k (measured: LOSES
-#: 2.2x at k=80/cells-2.5k where pairwise dominates, WINS 3.6x at
-#: k=800/cells-250). 100 splits the two measured regimes.
-_FLAT_ASSIGN_MAX_CELLS = 100
-
-
 def _perm_constants(num_perm: int) -> tuple[list[int], list[int]]:
     import hashlib
 
@@ -134,15 +130,15 @@ def base_hash48(s: Column) -> Column:
 # Arrow shingle kernels
 # ---------------------------------------------------------------------------
 #
-# One pandas UDF per (operator, params): normalized text in, signature out.
-# The expensive inner loop — shingle windows, md5, permutations / bit votes —
-# runs vectorized in numpy over a per-batch shingle vocabulary. Python str
+# One pandas UDF per call: normalized text in, signature out. Each call
+# builds a fresh UDF, never a process-wide memo — a cached UDF stays bound
+# to the SparkContext it was first used with, so after a session restart in
+# the same process it would run against the stopped context. The expensive
+# inner loop — shingle windows, md5, permutations / bit votes — runs
+# vectorized in numpy over a per-batch shingle vocabulary. Python str
 # slicing counts code points exactly like Spark's substr, and hashlib.md5 of
 # the UTF-8 encoding matches Spark/DuckDB md5, so results are bit-identical
 # to the expression engine (asserted in tests/test_operators.py).
-
-_KERNELS: dict[tuple, object] = {}
-
 
 def _batch_vocab(norm, ngram: int):
     """Per-doc arrays of shingle-vocabulary indices plus the vocabulary's
@@ -173,9 +169,6 @@ def _batch_vocab(norm, ngram: int):
 
 
 def _minhash_kernel(num_perm: int, ngram: int):
-    key = ("minhash", num_perm, ngram)
-    if key in _KERNELS:
-        return _KERNELS[key]
     from pyspark.sql.types import ArrayType, LongType
 
     a_np = np.array(_perm_constants(num_perm)[0], dtype=np.int64)
@@ -193,7 +186,6 @@ def _minhash_kernel(num_perm: int, ngram: int):
                 out[i] = perms[idx].min(axis=0).tolist()
         return pd.Series(out)
 
-    _KERNELS[key] = kernel
     return kernel
 
 
@@ -202,9 +194,6 @@ def _jaccard_kernel(ngram: int):
     NaN: Spark orders NaN above every double, so ``NaN >= t`` would pass the
     verify filter) when the union is empty, matching the expression
     ``jaccard``."""
-    key = ("jaccard", ngram)
-    if key in _KERNELS:
-        return _KERNELS[key]
     from pyspark.sql.types import DoubleType
 
     @F.pandas_udf(DoubleType())
@@ -232,14 +221,10 @@ def _jaccard_kernel(ngram: int):
                 out[i] = inter / union
         return pd.Series(out)
 
-    _KERNELS[key] = kernel
     return kernel
 
 
 def _simhash_kernel(bits: int, ngram: int):
-    key = ("simhash", bits, ngram)
-    if key in _KERNELS:
-        return _KERNELS[key]
     from pyspark.sql.types import LongType
 
     @F.pandas_udf(LongType())
@@ -255,7 +240,6 @@ def _simhash_kernel(bits: int, ngram: int):
                 out[i] = int(((s * 2 > len(idx)).astype(np.int64) * powers).sum())
         return pd.Series(out)
 
-    _KERNELS[key] = kernel
     return kernel
 
 
@@ -312,33 +296,6 @@ def minhash_signature_from_shingles(shingles: Column, num_perm: int = 16) -> Col
         ),
         1,
     )
-
-
-def minhash_band_hashes(sig: Column, bands: int, rows_per_band: int) -> Column:
-    """LSH band hashes: split the signature into ``bands`` slices of
-    ``rows_per_band`` and hash each slice. Returns ``array<string>``."""
-    idx = F.sequence(F.lit(0), F.lit(bands - 1))
-
-    def bands_of(s: Column) -> Column:
-        return F.transform(
-            idx,
-            lambda b: F.md5(
-                F.concat(
-                    b.cast("string"),
-                    F.lit("|"),
-                    F.array_join(
-                        F.transform(
-                            F.slice(s, b * rows_per_band + 1, rows_per_band),
-                            lambda v: v.cast("string"),
-                        ),
-                        ",",
-                    ),
-                )
-            ),
-        )
-
-    # Let-bind the signature so it is computed once, not once per band.
-    return F.element_at(F.transform(F.array(sig), bands_of), 1)
 
 
 def minhash_lsh_candidates(
@@ -1519,38 +1476,24 @@ def semantic_dedup(
     Scale shape: pairs exist only WITHIN a cell (the SemDeDup design point:
     at 100 TB n_cells is ~1e5, cells are ~1e4 rows, so the within-cell
     pairwise is bounded while cross-cell pairs — overwhelmingly non-dups —
-    are never formed); the cell assignment is a broadcast of n_cells
-    centroids + a two-phase groupBy-max argmax (map-side combine, no
-    window over the corpus); the loser election is the dedup family's
-    two-phase ``groupBy(id_b).min(id_a)`` + one join back. Boundary pairs
-    split across cells are missed by construction — the documented
-    SemDeDup trade (raise n_cells overlap via a second clustering pass if
-    that loss matters).
+    are never formed); the loser election is the dedup family's two-phase
+    ``groupBy(id_b).min(id_a)`` + one join back. Boundary pairs split
+    across cells are missed by construction — the documented SemDeDup
+    trade (raise n_cells overlap via a second clustering pass if that loss
+    matters).
 
-    ``assign_levels=None`` (the default) picks the routing from the cell
-    count: 2 (hierarchical) when ``n_cells > _FLAT_ASSIGN_MAX_CELLS``,
-    else 1 (flat) — so a naive caller at production cell counts gets the
-    scale-safe plan, while small-k callers keep the exactly-flat
-    assignment (measured: two-level LOSES 2.2x at k=80 where pairwise
-    dominates, WINS 3.6x at k=800). Pass ``assign_levels=1`` explicitly
-    for the faithful flat semantics at any k.
-
-    ``assign_levels=2`` replaces the flat n x n_cells assignment
-    argmax with HIERARCHICAL routing: centroids are grouped under
-    ceil(sqrt(n_cells)) super-centroids (the lowest-id centroids; each
-    child routes to its nearest super, itself for a super's own cell), a
-    vector picks its best super then its best child WITHIN that super —
-    O(n * sqrt(k)) candidate dot products instead of O(n * k). The r10
-    probe measured the flat assignment as the operator's only superlinear
-    term once cells scale with the corpus (k ∝ n makes flat assignment
-    O(n²/cell_size); alpha 1.16 at the fourth decade, pairwise itself
-    alpha 1.00 on balanced cells). Routing is approximate at super-cell
-    boundaries — a vector whose true-best cell's child lives under a
-    different super lands in a neighboring cell — which changes only the
-    PARTITION (the same documented SemDeDup boundary trade as n_cells),
-    never the verified cosine of an emitted pair; both levels tie-break
-    (rounded cos desc, lowest id) so the assignment is deterministic and
-    SQL-replayable (`semantic_dedup_two_level` oracle row).
+    Cell assignment is :func:`similarity._coarse_assign`, whose docstring
+    explains the routing. ``assign_levels=None`` (the default) picks
+    two-level routing above ``_FLAT_ASSIGN_MAX_CELLS`` cells, so a naive
+    caller at production cell counts gets the scale-safe plan; ``1`` is the
+    faithful flat assignment at any k; ``2`` forces the O(n * sqrt(k))
+    routing, probing ``super_probes`` supers per vector
+    (`semantic_dedup_two_level` oracle row). The r10 probe measured the
+    flat assignment as this operator's only superlinear term once cells
+    scale with the corpus (k ∝ n makes it O(n²/cell_size); alpha 1.16 at
+    the fourth decade, pairwise itself alpha 1.00 on balanced cells).
+    Two-level routing changes only the PARTITION at super-cell boundaries,
+    never the verified cosine of an emitted pair.
     """
     from instructionspipe_spark.functions.vectors import dot_product, l2_normalize
     from instructionspipe_spark.session import ensure_parallelism, managed_persist
@@ -1560,111 +1503,23 @@ def semantic_dedup(
         F.col("__nv").isNotNull()
     )
     if trained:
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        v_ml = v.withColumn("__mlvec", array_to_vector(F.col("__nv").cast("array<double>")))
-        model = KMeans(
-            k=n_cells, seed=seed, maxIter=max_iter,
-            featuresCol="__mlvec", predictionCol="__cell",
-        ).fit(v_ml)
         # L2-normalize the centroids before the dot-product argmax so the
         # assignment is spherical-kmeans (cosine argmax), not a
         # norm-weighted proxy of the fitted model's Euclidean predict —
         # over L2-normalized inputs, argmax cos(v, c/|c|) == argmin
         # ||v - c|| up to the centroid-norm term, and normalizing removes
         # that term exactly (ADVICE r6).
-        cent = df.sparkSession.createDataFrame(
-            [(i, [float(x) for x in ctr]) for i, ctr in enumerate(model.clusterCenters())],
-            ["__cell", "__cent"],
-        ).select(
-            "__cell",
-            l2_normalize(F.col("__cent").cast("array<double>")).alias("__cent"),
+        cent = _trained_centroids(v, "__nv", n_cells, seed, max_iter).select(
+            "__cell", l2_normalize(F.col("__cent")).alias("__cent")
         )
     else:
-        cent = (
-            v.orderBy("__id")
-            .limit(n_cells)
-            .select(F.col("__id").alias("__cell"), F.col("__nv").alias("__cent"))
-        )
-    if assign_levels is None:
-        assign_levels = 2 if n_cells > _FLAT_ASSIGN_MAX_CELLS else 1
-    if assign_levels not in (1, 2):
-        raise ValueError(f"assign_levels must be None, 1 or 2, got {assign_levels}")
-
-    def _argmax(df: DataFrame, keys: list, vec: str, cand_id: str, cand_vec: str, out: str) -> DataFrame:
-        """Two-phase groupBy-max argmax on a (rounded-cos, -candidate_id)
-        struct — map-side combine, lowest candidate id on ties."""
-        return (
-            df.select(
-                *keys,
-                vec,
-                F.struct(
-                    F.round(dot_product(F.col(vec), F.col(cand_vec)), round_digits).alias("__c"),
-                    (-F.col(cand_id)).alias("__neg"),
-                ).alias("__s"),
-            )
-            .groupBy(*keys)
-            .agg(F.max("__s").alias("__m"), F.first(vec).alias(vec))
-            .select(*keys, (-F.col("__m.__neg")).alias(out), vec)
-        )
-
-    if assign_levels == 2:
-        import math
-
-        n_super = math.isqrt(max(n_cells - 1, 0)) + 1  # ceil(sqrt(n_cells))
-        sup = (
-            cent.orderBy("__cell")
-            .limit(n_super)
-            .select(F.col("__cell").alias("__super"), F.col("__cent").alias("__scent"))
-        )
-        # child centroid -> super routing: k x sqrt(k), tiny, broadcast both
-        # sides. A super's own cell routes to itself (cos = 1 is the max).
-        c2s = _argmax(
-            cent.crossJoin(F.broadcast(sup)).withColumnRenamed("__cent", "__cvec"),
-            ["__cell"], "__cvec", "__super", "__scent", "__super",
-        ).withColumnRenamed("__cvec", "__cent")
-        # vector -> top `super_probes` supers: n x sqrt(k) candidates. One
-        # probe is NOT enough — measured at the fourth decade, single-probe
-        # routing skews cell occupancy 4x (max cell 2,951 -> 11,892 on
-        # balanced data) because a misrouted vector is forced onto its
-        # super's best child, and the pairwise term is quadratic in the
-        # hottest cell. Probing the top-2 supers (IVF's n_probe trick)
-        # widens each vector's candidate children enough to restore the
-        # flat assignment's balance while keeping O(n * sqrt(k)) dots.
-        # The per-vector top-P window is safe: partitions are size
-        # sqrt(k), never a hot key.
-        w = Window.partitionBy("__id").orderBy(
-            F.desc("__c"), F.asc("__super")
-        )
-        vsup = (
-            v.crossJoin(F.broadcast(sup))
-            .select(
-                "__id",
-                "__nv",
-                "__super",
-                F.round(
-                    dot_product(F.col("__nv"), F.col("__scent")), round_digits
-                ).alias("__c"),
-            )
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= super_probes)
-            .select("__id", "__nv", "__super")
-        )
-        # vector -> best child across its probed supers: each cell belongs
-        # to exactly one super, so candidates never duplicate.
-        assigned = managed_persist(
-            _argmax(
-                vsup.join(F.broadcast(c2s), "__super"),
-                ["__id"], "__nv", "__cell", "__cent", "__cell",
-            ).select("__id", "__cell", "__nv")
-        )
-    else:
-        assigned = managed_persist(
-            _argmax(
-                v.crossJoin(F.broadcast(cent)), ["__id"], "__nv", "__cell", "__cent", "__cell"
-            ).select("__id", "__cell", "__nv")
-        )
+        cent = _seed_centroids(v, "__id", "__nv", n_cells)
+    assigned = managed_persist(
+        _coarse_assign(
+            v, "__id", "__nv", cent, n_cells, levels=assign_levels,
+            super_probes=super_probes, round_digits=round_digits,
+        ).select("__id", "__cell", "__nv")
+    )
     a, b = assigned.alias("a"), assigned.alias("b")
     pairs = (
         a.join(b, (F.col("a.__cell") == F.col("b.__cell")) & (F.col("a.__id") < F.col("b.__id")))

@@ -5,19 +5,209 @@ set against the corpus, per-row cosine expression, per-query top-k via
 window. At 100 TB the corpus side streams through executors once; only the
 query set and the k results per query move.
 
-Scale path: LSH bucketing by random-hyperplane sign bits (deterministic
+Scale paths: LSH bucketing by random-hyperplane sign bits (deterministic
 hyperplanes derived from md5 of coordinate indexes so no RNG state), probing
-only matching buckets — the classic sign-LSH ANN layout. An IVF variant
-(k-means cells) would use ``pyspark.ml.clustering.KMeans``; sign-LSH is
-preferred here because it is stateless and oracle-checkable.
+only matching buckets; IVF cells, PQ codes and SQ8 codes, each with a
+data-seeded deterministic (oracle-checkable) quantizer and a ``pyspark.ml``
+KMeans-trained twin.
+
+Every member of the family shares one mechanism per decision: ranking
+vectors against centroids (:func:`_coarse_assign`, also used by
+``dedup.semantic_dedup``), the lowest-id centroid seed, the literal-array
+nearest-cell probe, the seeded and trained PQ codebooks, and the per-group
+top-k tail (:func:`_topk`).
 """
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from instructionspipe_spark.functions.vectors import cosine_similarity, dot_product
+from instructionspipe_spark.functions.vectors import dot_product, l2_normalize
+from instructionspipe_spark.session import ensure_parallelism, managed_persist
+
+#: Largest ``n_cells`` at which the default (``levels=None``) routing of
+#: :func:`_coarse_assign` stays FLAT. Flat assignment is O(n * k) dots — the
+#: operator's only superlinear term once cells scale with the corpus (r10
+#: probe: alpha 1.16 -> 1.56); two-level routing is O(n * sqrt(k)) but pays
+#: a super-centroid stage that only amortizes at large k (measured on
+#: semantic_dedup: LOSES 2.2x at k=80/cells-2.5k where pairwise dominates,
+#: WINS 3.6x at k=800/cells-250). 100 splits the two measured regimes.
+_FLAT_ASSIGN_MAX_CELLS = 100
+
+
+def _topk(df: DataFrame, part, order: list, k: int, rank: str = "rank") -> DataFrame:
+    """The first ``k`` rows of each ``part`` group under ``order``, numbered
+    1..k in column ``rank`` (row_number: ties are broken by ``order`` alone,
+    so callers end it with a unique id). A ``row_number <= k`` filter plans
+    WindowGroupLimit: each map task cuts its input to k rows per group
+    (Partial, before the hash exchange) and only those rows shuffle, so a
+    group is never sorted whole on one task."""
+    w = Window.partitionBy(part).orderBy(*order)
+    return df.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= k)
+
+
+def _cosine_topk(
+    pairs: DataFrame, k: int, query_id: str, corpus_id: str, rank_round: int | None
+) -> DataFrame:
+    """Exact cosine of candidate pairs whose sides are already unit vectors
+    (``__qnv``, ``__cnv``), top-k per query: cosine desc, corpus id asc.
+    ``rank_round`` ranks on the cosine ROUNDED to that many decimals, making
+    the ordering reproducible across engines whose float summation order
+    differs (two near-equal cosines can rank either way at full precision —
+    a differential-testing hazard, not a correctness one)."""
+    scored = pairs.select(
+        F.col(query_id),
+        F.col(corpus_id),
+        dot_product(F.col("__qnv"), F.col("__cnv")).alias("cosine"),
+    )
+    rank_key = F.round(F.col("cosine"), rank_round) if rank_round is not None else F.col("cosine")
+    return _topk(scored, query_id, [F.desc(rank_key), F.asc(corpus_id)], k)
+
+
+def _seed_centroids(
+    vecs: DataFrame, id_col: str, vec_col: str, n: int, cell: str = "__cell", cent: str = "__cent"
+) -> DataFrame:
+    """Data-seeded deterministic centroids: the ``n`` lowest-id rows as
+    ``(cell, cent)``, the cell id being the row's own id. Executes as
+    TakeOrdered (no sort of the full input) and needs no Lloyd iterations,
+    so everything downstream stays fixed-order float arithmetic."""
+    return vecs.orderBy(id_col).limit(n).select(F.col(id_col).alias(cell), F.col(vec_col).alias(cent))
+
+
+def _kmeans_centers(df: DataFrame, vec_col: str, k: int, seed: int, max_iter: int) -> list:
+    """Centers of a fixed-seed ``pyspark.ml`` KMeans fit over ``vec_col`` —
+    the trainer behind every ``trained`` quantizer. At 100 TB the fit runs
+    on a corpus SAMPLE; the model is k centers regardless of corpus size."""
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import array_to_vector
+
+    feats = df.select(array_to_vector(F.col(vec_col).cast("array<double>")).alias("__mlvec"))
+    model = KMeans(
+        k=k, seed=seed, maxIter=max_iter, featuresCol="__mlvec", predictionCol="__cell"
+    ).fit(feats)
+    return [[float(x) for x in c] for c in model.clusterCenters()]
+
+
+def _trained_centroids(
+    vecs: DataFrame, vec_col: str, n_cells: int, seed: int, max_iter: int
+) -> DataFrame:
+    """KMeans centroids as a ``(__cell, __cent)`` frame, cells 0..n_cells-1."""
+    rows = list(enumerate(_kmeans_centers(vecs, vec_col, n_cells, seed, max_iter)))
+    return vecs.sparkSession.createDataFrame(rows, ["__cell", "__cent"]).select(
+        "__cell", F.col("__cent").cast("array<double>").alias("__cent")
+    )
+
+
+def _coarse_assign(
+    vecs: DataFrame,
+    id_col: str,
+    vec_col: str,
+    cent: DataFrame,
+    n_cells: int,
+    n_keep: int = 1,
+    levels: int | None = 1,
+    super_probes: int = 2,
+    round_digits: int = 6,
+) -> DataFrame:
+    """Route each unit vector of ``vecs`` to its ``n_keep`` best cells of
+    ``cent`` ((__cell, __cent), at most ``n_cells`` rows): ``(id_col,
+    vec_col, __cell)``, ``n_keep`` rows per vector. The only code that ranks
+    vectors against centroids — IVF corpus assignment and query probes,
+    IVFADC/IVF+SQ8 cells and SemDeDup cells all route through it.
+
+    Ranking: cosine rounded to ``round_digits`` decimals, desc, then the
+    lowest candidate id, so two engines whose float formatting differs at
+    the last ulp still assign identically, and the whole assignment is
+    SQL-replayable.
+
+    Plan: the centroid set is tiny and broadcast; each vector is scored
+    against it in one narrow broadcast cross join, and the argmax is the
+    :func:`_topk` window keyed by the vector id. Its Partial
+    WindowGroupLimit cuts every vector to ``n_keep`` rows map-side, before
+    the exchange — the same map-side cut a two-phase groupBy struct-max
+    gives, and the window also serves top-n query probes and multiple
+    assignment, which a max cannot. Timed against struct-max on the two
+    routing ``corpus_dedup`` benchmark rows (4-vCPU host, local[4], build
+    + collect, median of 9 and 5 alternated reps; window vs struct-max):
+    SemDeDup 1.44 vs 1.52 s at 800 vectors and 34.5 vs 34.4 s at 10,000,
+    IVF 1.26 vs 1.32 s and 2.24 vs 2.33 s — inside each other's spread.
+
+    ``levels``: ``1`` is the flat argmax, O(n * k) dots. ``2`` is
+    two-level routing: ceil(sqrt(n_cells)) super-centroids (the lowest-id
+    centroids; each child routes to its nearest super, a super's own cell
+    to itself since cos 1 is the max); a vector probes its top
+    ``super_probes`` supers and takes its best children among their
+    children — O(n * sqrt(k)) dots. One probe is NOT enough: measured at the
+    fourth decade, single-probe routing skews SemDeDup's cell occupancy 4x
+    (max cell 2,951 -> 11,892 on balanced data) because a misrouted vector
+    is forced onto its super's best child, and the pairwise term is
+    quadratic in the hottest cell; probing the top 2 (IVF's n_probe trick)
+    restores the flat balance. Misrouting is confined to super-cell
+    boundaries and changes only which CELL a vector lands in (the same
+    partition trade as n_cells itself), never an emitted cosine. Each cell
+    belongs to exactly one super, so candidates never duplicate; with every
+    super probed the result equals the flat one exactly. ``None`` picks 2
+    when ``n_cells > _FLAT_ASSIGN_MAX_CELLS``, else 1.
+    """
+    if levels is None:
+        levels = 2 if n_cells > _FLAT_ASSIGN_MAX_CELLS else 1
+    if levels not in (1, 2):
+        raise ValueError(f"assign_levels must be None, 1 or 2, got {levels}")
+
+    def nearest(df: DataFrame, key: str, vec: str, cand: str, cand_vec: str, n: int) -> DataFrame:
+        scored = df.select(
+            key, vec, cand,
+            F.round(dot_product(F.col(vec), F.col(cand_vec)), round_digits).alias("__acos"),
+        )
+        return _topk(scored, key, [F.desc("__acos"), F.asc(cand)], n, "__ar").drop("__acos", "__ar")
+
+    if levels == 1:
+        return nearest(vecs.crossJoin(F.broadcast(cent)), id_col, vec_col, "__cell", "__cent", n_keep)
+    n_super = math.isqrt(max(n_cells - 1, 0)) + 1  # ceil(sqrt(n_cells))
+    sup = _seed_centroids(cent, "__cell", "__cent", n_super, "__super", "__scent")
+    # child -> super: k x sqrt(k) rows, tiny, broadcast on both sides.
+    c2s = nearest(cent.crossJoin(F.broadcast(sup)), "__cell", "__cent", "__super", "__scent", 1)
+    # vector -> top supers: n x sqrt(k) dots; the per-vector window
+    # partitions over sqrt(k) rows, never a hot key.
+    vsup = nearest(vecs.crossJoin(F.broadcast(sup)), id_col, vec_col, "__super", "__scent", super_probes)
+    return nearest(vsup.join(F.broadcast(c2s), "__super"), id_col, vec_col, "__cell", "__cent", n_keep)
+
+
+def _l2sq(a: Column, b: Column) -> Column:
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
+def _nearest_literal_cells(df: DataFrame, raw_vec: Column, centers: list, n_keep: int) -> DataFrame:
+    """Explode each row of ``df`` into its ``n_keep`` nearest cells
+    (``__cell``) by L2 to ``centers``, inlined as a literal array — the
+    centroid list is tiny, so the distance is computed per row with no
+    join. Serves the trained IVF query probes and multiple assignment."""
+    centers_col = F.array(*[
+        F.struct(F.lit(i).alias("cell"), F.array(*[F.lit(x) for x in c]).alias("center"))
+        for i, c in enumerate(centers)
+    ])
+    return df.withColumn(
+        "__cells",
+        F.slice(
+            F.array_sort(
+                F.transform(
+                    centers_col,
+                    lambda s: F.struct(
+                        _l2sq(raw_vec, s["center"]).alias("dist"), s["cell"].alias("cell")
+                    ),
+                )
+            ),
+            1,
+            n_keep,
+        ),
+    ).select(*df.columns, F.explode(F.col("__cells")["cell"]).alias("__cell"))
 
 
 def brute_force_topk(
@@ -33,33 +223,17 @@ def brute_force_topk(
     """Exact top-k by cosine for each query vector.
 
     Ties broken by corpus id ascending for full determinism; ``rank_round``
-    ranks on the cosine ROUNDED to that many decimals, making the ordering
-    reproducible across engines whose float summation order differs (two
-    near-equal cosines can rank either way at full precision — a
-    differential-testing hazard, not a correctness one). Plan: broadcast
-    the query side (queries << corpus always), compute cosine in codegen,
-    rank with a window partitioned by query — the only shuffle is on
-    query_id, whose cardinality = |queries|.
+    ranks on the cosine ROUNDED to that many decimals (see
+    :func:`_cosine_topk`). Plan: broadcast the query side (queries << corpus
+    always), compute cosine in codegen, rank with a window partitioned by
+    query — the only shuffle is on query_id, whose cardinality = |queries|.
     """
-    from instructionspipe_spark.functions.vectors import dot_product, l2_normalize
-    from instructionspipe_spark.session import ensure_parallelism
-
     corpus = ensure_parallelism(corpus)
     # Normalize each side once per row; each of the |C|x|Q| pairs is then a
     # single dot product (cosine of unit vectors).
     c = corpus.select(F.col(corpus_id), l2_normalize(F.col(corpus_vec)).alias("__cnv"))
     q = queries.select(F.col(query_id), l2_normalize(F.col(query_vec)).alias("__qnv"))
-    joined = c.crossJoin(F.broadcast(q)).select(
-        F.col(query_id),
-        F.col(corpus_id),
-        dot_product(F.col("__qnv"), F.col("__cnv")).alias("cosine"),
-    )
-    rank_key = F.round(F.col("cosine"), rank_round) if rank_round is not None else F.col("cosine")
-    w = Window.partitionBy(query_id).orderBy(F.desc(rank_key), F.asc(corpus_id))
-    return (
-        joined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _cosine_topk(c.crossJoin(F.broadcast(q)), k, query_id, corpus_id, rank_round)
 
 
 def hyperplane_sign_bits(vec: Column, n_bits: int = 8, bit_offset: int = 0) -> Column:
@@ -118,9 +292,6 @@ def lsh_bucketed_topk(
     buckets => ~corpus/2^bits candidates per query). Equi-join on the bucket
     replaces the cross join, so the candidate generation is a plain
     broadcast-hash join at any scale; multi-probe = union over flipped bits."""
-    from instructionspipe_spark.functions.vectors import dot_product, l2_normalize
-    from instructionspipe_spark.session import ensure_parallelism
-
     corpus = ensure_parallelism(corpus)
     c = corpus.select(
         F.col(corpus_id),
@@ -132,14 +303,7 @@ def lsh_bucketed_topk(
         l2_normalize(F.col(query_vec)).alias("__qnv"),
         hyperplane_sign_bits(F.col(query_vec), n_bits).alias("__bucket"),
     )
-    joined = c.join(F.broadcast(q), "__bucket").select(
-        F.col(query_id),
-        F.col(corpus_id),
-        dot_product(F.col("__qnv"), F.col("__cnv")).alias("cosine"),
-    )
-    rank_key = F.round(F.col("cosine"), rank_round) if rank_round is not None else F.col("cosine")
-    w = Window.partitionBy(query_id).orderBy(F.desc(rank_key), F.asc(corpus_id))
-    return joined.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _cosine_topk(c.join(F.broadcast(q), "__bucket"), k, query_id, corpus_id, rank_round)
 
 
 def lsh_multiprobe_topk(
@@ -160,9 +324,6 @@ def lsh_multiprobe_topk(
     happens on the (small, broadcast) query side; the corpus still streams
     through one equi-join. A corpus vector matches a query through exactly
     one probe (its single bucket), so no candidate dedup is needed."""
-    from instructionspipe_spark.functions.vectors import dot_product, l2_normalize
-    from instructionspipe_spark.session import ensure_parallelism
-
     corpus = ensure_parallelism(corpus)
     c = corpus.select(
         F.col(corpus_id),
@@ -178,14 +339,7 @@ def lsh_multiprobe_topk(
         F.col("__b0"), *[F.col("__b0").bitwiseXOR(F.lit(1 << b)) for b in range(n_bits)]
     )
     qp = q.select(F.col(query_id), F.col("__qnv"), F.explode(probes).alias("__bucket"))
-    joined = c.join(F.broadcast(qp), "__bucket").select(
-        F.col(query_id),
-        F.col(corpus_id),
-        dot_product(F.col("__qnv"), F.col("__cnv")).alias("cosine"),
-    )
-    rank_key = F.round(F.col("cosine"), rank_round) if rank_round is not None else F.col("cosine")
-    w = Window.partitionBy(query_id).orderBy(F.desc(rank_key), F.asc(corpus_id))
-    return joined.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _cosine_topk(c.join(F.broadcast(qp), "__bucket"), k, query_id, corpus_id, rank_round)
 
 
 def lsh_multitable_topk(
@@ -221,9 +375,6 @@ def lsh_multitable_topk(
     vs 0.60 for single-table multiprobe and 1.00 at ``n_tables=6`` — the
     gated floor lives in ``tests/test_param_fuzz.py::test_ann_recall_floor``.
     """
-    from instructionspipe_spark.functions.vectors import dot_product, l2_normalize
-    from instructionspipe_spark.session import ensure_parallelism
-
     corpus = ensure_parallelism(corpus)
     c = corpus.select(F.col(corpus_id), l2_normalize(F.col(corpus_vec)).alias("__cnv"))
 
@@ -272,14 +423,8 @@ def lsh_multitable_topk(
         .distinct()
     )
     q_vecs = q_base.select(query_id, "__qnv")
-    joined = cand.join(c, corpus_id).join(F.broadcast(q_vecs), query_id).select(
-        F.col(query_id),
-        F.col(corpus_id),
-        dot_product(F.col("__qnv"), F.col("__cnv")).alias("cosine"),
-    )
-    rank_key = F.round(F.col("cosine"), rank_round) if rank_round is not None else F.col("cosine")
-    w = Window.partitionBy(query_id).orderBy(F.desc(rank_key), F.asc(corpus_id))
-    return joined.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    pairs = cand.join(c, corpus_id).join(F.broadcast(q_vecs), query_id)
+    return _cosine_topk(pairs, k, query_id, corpus_id, rank_round)
 
 
 def ivf_topk_deterministic(
@@ -304,136 +449,29 @@ def ivf_topk_deterministic(
     oracle-gated twin of :func:`ivf_topk` (whose iterative k-means trainer
     gives better cells but is engine-specific).
 
-    ``assign_levels`` routes the CORPUS assignment (the O(n*k) term —
-    queries are few, so their flat O(q*k) probe ranking is kept exact at
-    any k): ``None`` (default) picks hierarchical when ``n_cells > 100``
-    (same adaptive rule and ``_FLAT_ASSIGN_MAX_CELLS`` boundary as
-    ``semantic_dedup``), ``1`` forces the flat argmax, ``2`` forces
-    two-level routing — ceil(sqrt(k)) super-centroids (lowest-id
-    centroids), each corpus vector probes its top-``super_probes`` supers
-    and takes the best child among their children: O(n*sqrt(k)) dots.
-    Misrouting is confined to super-cell boundaries and only changes which
-    CELL a corpus vector lands in (the same partition trade as n_cells
-    itself); emitted cosines are always exact. Gated as
-    ``similarity_ivf_two_level_topk`` with a full two-level oracle replay.
+    Routing is :func:`_coarse_assign` (ranking on the cosine rounded to
+    ``assign_round`` decimals, cell id tie break). ``assign_levels`` and
+    ``super_probes`` route the CORPUS assignment — the O(n*k) term;
+    ``None`` picks two-level above ``_FLAT_ASSIGN_MAX_CELLS`` cells, ``1``
+    forces flat, ``2`` forces two-level (gated as
+    ``similarity_ivf_two_level_topk`` with a full two-level oracle replay).
+    Queries are few, so their top-``n_probe`` probe ranking stays flat and
+    exact at any k; emitted cosines are always exact.
 
     Plan shape is identical to production IVF: the centroid set is tiny and
-    broadcast; corpus cell assignment is one narrow broadcast-join pass with
-    a per-row top-1 window keyed by the corpus id (no shuffle of the fact
-    side beyond the window's hash on corpus_id); the probe is an equi-join
-    on the cell id with the query side broadcast. Assignment ranks on the
-    cosine rounded to ``assign_round`` decimals with the cell id as the tie
-    break, so two engines whose float formatting differs at the last ulp
-    still assign identically."""
-    from instructionspipe_spark.functions.vectors import dot_product, l2_normalize
-    from instructionspipe_spark.session import ensure_parallelism
-
+    broadcast; corpus cell assignment is one narrow broadcast-join pass; the
+    probe is an equi-join on the cell id with the query side broadcast."""
     corpus = ensure_parallelism(corpus)
     c = corpus.select(F.col(corpus_id), l2_normalize(F.col(corpus_vec)).alias("__cnv"))
-    # Centroids: lowest-id corpus vectors; executes as TakeOrdered (no sort
-    # of the full corpus). Cell id = the centroid's own corpus id.
-    cent = (
-        c.orderBy(corpus_id)
-        .limit(n_cells)
-        .select(F.col(corpus_id).alias("__cell"), F.col("__cnv").alias("__cent"))
+    cent = _seed_centroids(c, corpus_id, "__cnv", n_cells)
+    c_cells = _coarse_assign(
+        c, corpus_id, "__cnv", cent, n_cells, levels=assign_levels,
+        super_probes=super_probes, round_digits=assign_round,
     )
-
-    def assign(df: DataFrame, id_col: str, vec_col: str, n_keep: int) -> DataFrame:
-        scored = df.crossJoin(F.broadcast(cent)).select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.col("__cell"),
-            F.round(dot_product(F.col(vec_col), F.col("__cent")), assign_round).alias("__acos"),
-        )
-        w = Window.partitionBy(id_col).orderBy(F.desc("__acos"), F.asc("__cell"))
-        return (
-            scored.withColumn("__ar", F.row_number().over(w))
-            .filter(F.col("__ar") <= n_keep)
-            .drop("__acos", "__ar")
-        )
-
-    if assign_levels is None:
-        from instructionspipe_spark.operators.dedup import _FLAT_ASSIGN_MAX_CELLS
-
-        assign_levels = 2 if n_cells > _FLAT_ASSIGN_MAX_CELLS else 1
-    if assign_levels not in (1, 2):
-        raise ValueError(f"assign_levels must be None, 1 or 2, got {assign_levels}")
-    if assign_levels == 2:
-        import math
-
-        n_super = math.isqrt(max(n_cells - 1, 0)) + 1  # ceil(sqrt(n_cells))
-        sup = (
-            cent.orderBy("__cell")
-            .limit(n_super)
-            .select(F.col("__cell").alias("__super"), F.col("__cent").alias("__scent"))
-        )
-        # child centroid -> super routing: k x sqrt(k), tiny, broadcast
-        # both sides; a super's own cell routes to itself (cos 1 is max).
-        c2s = (
-            cent.crossJoin(F.broadcast(sup))
-            .select(
-                "__cell", "__cent", "__super",
-                F.round(dot_product(F.col("__cent"), F.col("__scent")), assign_round).alias("__sc"),
-            )
-            .withColumn(
-                "__rn",
-                F.row_number().over(
-                    Window.partitionBy("__cell").orderBy(F.desc("__sc"), F.asc("__super"))
-                ),
-            )
-            .filter(F.col("__rn") == 1)
-            .select("__cell", "__cent", "__super")
-        )
-        # corpus vector -> top `super_probes` supers: n x sqrt(k) dots.
-        # Top-2 (not 1): single-probe routing measurably skews cell
-        # occupancy (the N55 finding) — a misrouted vector is forced onto
-        # its super's best child. The per-vector window partitions over
-        # sqrt(k) rows, never a hot key.
-        vsup = (
-            c.crossJoin(F.broadcast(sup))
-            .select(
-                corpus_id, "__cnv", "__super",
-                F.round(dot_product(F.col("__cnv"), F.col("__scent")), assign_round).alias("__sc"),
-            )
-            .withColumn(
-                "__rn",
-                F.row_number().over(
-                    Window.partitionBy(corpus_id).orderBy(F.desc("__sc"), F.asc("__super"))
-                ),
-            )
-            .filter(F.col("__rn") <= super_probes)
-            .select(corpus_id, "__cnv", "__super")
-        )
-        # best child across the probed supers' children: each cell belongs
-        # to exactly one super, so candidates never duplicate.
-        c_cells = (
-            vsup.join(F.broadcast(c2s), "__super")
-            .select(
-                corpus_id, "__cnv", "__cell",
-                F.round(dot_product(F.col("__cnv"), F.col("__cent")), assign_round).alias("__acos"),
-            )
-            .withColumn(
-                "__ar",
-                F.row_number().over(
-                    Window.partitionBy(corpus_id).orderBy(F.desc("__acos"), F.asc("__cell"))
-                ),
-            )
-            .filter(F.col("__ar") == 1)
-            .drop("__acos", "__ar")
-        )
-    else:
-        c_cells = assign(c, corpus_id, "__cnv", 1)
     q = queries.select(F.col(query_id), l2_normalize(F.col(query_vec)).alias("__qnv"))
-    q_probes = assign(q, query_id, "__qnv", n_probe)
-
-    joined = c_cells.join(F.broadcast(q_probes), "__cell").select(
-        F.col(query_id),
-        F.col(corpus_id),
-        dot_product(F.col("__qnv"), F.col("__cnv")).alias("cosine"),
-    )
-    rank_key = F.round(F.col("cosine"), rank_round) if rank_round is not None else F.col("cosine")
-    w = Window.partitionBy(query_id).orderBy(F.desc(rank_key), F.asc(corpus_id))
-    return joined.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    q_probes = _coarse_assign(q, query_id, "__qnv", cent, n_cells, n_probe, round_digits=assign_round)
+    pairs = c_cells.join(F.broadcast(q_probes), "__cell")
+    return _cosine_topk(pairs, k, query_id, corpus_id, rank_round)
 
 
 def ivf_topk(
@@ -459,9 +497,6 @@ def ivf_topk(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    from instructionspipe_spark.functions.vectors import dot_product, l2_normalize
-    from instructionspipe_spark.session import ensure_parallelism
-
     corpus = ensure_parallelism(corpus)
     c_vec = corpus.select(
         F.col(corpus_id), F.col(corpus_vec),
@@ -471,50 +506,17 @@ def ivf_topk(
     c_cells = model.transform(c_vec).select(
         F.col(corpus_id), l2_normalize(F.col(corpus_vec)).alias("__cnv"), F.col("__cell")
     )
-
-    # Query -> n_probe nearest centroids (centroid list is tiny: broadcast
-    # as a literal array, distance computed per query row).
     centers = [list(map(float, c)) for c in model.clusterCenters()]
-    centers_col = F.array(*[
-        F.struct(F.lit(i).alias("cell"), F.array(*[F.lit(x) for x in c]).alias("center"))
-        for i, c in enumerate(centers)
-    ])
     q = queries.select(
         F.col(query_id),
         l2_normalize(F.col(query_vec)).alias("__qnv"),
         F.col(query_vec).cast("array<double>").alias("__qv"),
     )
-    with_dists = q.withColumn(
-        "__cells",
-        F.slice(
-            F.array_sort(
-                F.transform(
-                    centers_col,
-                    lambda s: F.struct(
-                        F.aggregate(
-                            F.zip_with(F.col("__qv"), s["center"], lambda a, b: (a - b) * (a - b)),
-                            F.lit(0.0),
-                            lambda acc, x: acc + x,
-                        ).alias("dist"),
-                        s["cell"].alias("cell"),
-                    ),
-                )
-            ),
-            1,
-            n_probe,
-        ),
+    probed = _nearest_literal_cells(q, F.col("__qv"), centers, n_probe).select(
+        query_id, "__qnv", "__cell"
     )
-    probed = with_dists.select(
-        F.col(query_id), F.col("__qnv"), F.explode(F.col("__cells")["cell"]).alias("__cell")
-    )
-    joined = c_cells.join(F.broadcast(probed), "__cell").select(
-        F.col(query_id),
-        F.col(corpus_id),
-        dot_product(F.col("__qnv"), F.col("__cnv")).alias("cosine"),
-    )
-    rank_key = F.round(F.col("cosine"), rank_round) if rank_round is not None else F.col("cosine")
-    w = Window.partitionBy(query_id).orderBy(F.desc(rank_key), F.asc(corpus_id))
-    return joined.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    pairs = c_cells.join(F.broadcast(probed), "__cell")
+    return _cosine_topk(pairs, k, query_id, corpus_id, rank_round)
 
 
 def _pq_subvectors(df: DataFrame, id_alias: str, vec_col: str, m: int) -> DataFrame:
@@ -523,8 +525,6 @@ def _pq_subvectors(df: DataFrame, id_alias: str, vec_col: str, m: int) -> DataFr
     row (Generate input stays trivial; the slice runs in codegen). Raises
     per-row when dim % m != 0 — a silent truncation would quietly change
     every distance."""
-    from instructionspipe_spark.functions.vectors import l2_normalize
-
     nv = df.select(F.col(id_alias), l2_normalize(F.col(vec_col)).alias("__nv")).filter(
         F.col("__nv").isNotNull()
     )
@@ -549,11 +549,40 @@ def _pq_subvectors(df: DataFrame, id_alias: str, vec_col: str, m: int) -> DataFr
     )
 
 
-def _pq_l2sq(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+def _seeded_codebook(csub: DataFrame, corpus: DataFrame, corpus_id: str, n_codes: int) -> DataFrame:
+    """The data-seeded deterministic PQ codebook ``(__j, __code, __cw)``
+    over already-built subvectors ``csub``: subspace ``j``'s codewords are
+    the ``j``-th subvectors of the ``n_codes`` lowest-id ``corpus`` rows,
+    code = rank of that id (tiny n_codes*m frame — the single-partition
+    window is over n_codes rows, executed once). Seed ids come from the raw
+    corpus, so a zero-norm seed row leaves its code missing and trips the
+    scoring-side cardinality guard instead of silently shifting codes."""
+    seed_ids = (
+        corpus.select(F.col(corpus_id))
+        .orderBy(corpus_id)
+        .limit(n_codes)
+        .withColumn("__code", F.row_number().over(Window.orderBy(corpus_id)) - 1)
+    )
+    return csub.join(F.broadcast(seed_ids), corpus_id).select(
+        "__j", "__code", F.col("__sub").alias("__cw")
+    )
+
+
+def _trained_codebook(
+    csub: DataFrame, m: int, n_codes: int, seed_base: int, max_iter: int
+) -> DataFrame:
+    """Per-subspace KMeans codebooks ``(__j, __code, __cw)``: subspace ``j``
+    is fit with seed ``seed_base + j`` (m models of n_codes centroids; the
+    model is m*n_codes*subdim floats regardless of corpus size)."""
+    rows = [
+        (j, code, cw)
+        for j in range(m)
+        for code, cw in enumerate(
+            _kmeans_centers(csub.filter(F.col("__j") == j), "__sub", n_codes, seed_base + j, max_iter)
+        )
+    ]
+    return csub.sparkSession.createDataFrame(rows, ["__j", "__code", "__cw"]).select(
+        "__j", "__code", F.col("__cw").cast("array<double>").alias("__cw")
     )
 
 
@@ -571,7 +600,7 @@ def _pq_codes(
             corpus_id,
             "__j",
             F.struct(
-                F.round(_pq_l2sq(F.col("__sub"), F.col("__cw")), assign_round).alias("__d2"),
+                F.round(_l2sq(F.col("__sub"), F.col("__cw")), assign_round).alias("__d2"),
                 F.col("__code"),
             ).alias("__s"),
         )
@@ -610,8 +639,9 @@ def _pq_encode_score(
     assemble the m-code array (and that exchange IS the compressed
     representation a 100 TB pipeline persists: m bytes/vector instead of
     4*dim). Scoring joins the broadcast per-query LUT and sums m array
-    lookups per (query, vector) in codegen; the final top-k is a rank<=k
-    window (WindowGroupLimit: per-partition pre-truncation, skew-safe).
+    lookups per (query, vector) in codegen; the final top-k is
+    :func:`_topk` (WindowGroupLimit: per-partition pre-truncation,
+    skew-safe).
 
     ``candidates`` (a (query_id, corpus_id) pair frame) restricts scoring to
     those pairs instead of the full query x corpus product — the IVFADC
@@ -632,7 +662,7 @@ def _pq_encode_score(
         .select(
             query_id,
             (F.col("__j") * n_codes + F.col("__code")).alias("__idx"),
-            F.round(_pq_l2sq(F.col("__sub"), F.col("__cw")), assign_round).alias("__d2"),
+            F.round(_l2sq(F.col("__sub"), F.col("__cw")), assign_round).alias("__d2"),
         )
         .groupBy(query_id)
         .agg(lut_pairs.alias("__pairs"))
@@ -685,8 +715,7 @@ def _pq_encode_score(
         .cast("double")
         .alias("adc_dist"),
     )
-    w = Window.partitionBy(query_id).orderBy(F.asc("adc_dist"), F.asc(corpus_id))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _topk(scored, query_id, [F.asc("adc_dist"), F.asc(corpus_id)], k)
 
 
 def _pq_rerank(
@@ -703,8 +732,6 @@ def _pq_rerank(
     only ``shortlist`` rows per query (bounded by the rerank width), so the
     bytes story survives: the SCAN reads m-byte codes, the rerank reads
     R << corpus full vectors via one equi-join on the corpus id."""
-    from instructionspipe_spark.functions.vectors import dot_product
-
     exact = (
         shortlist.join(corpus_nv, corpus_id)
         .join(F.broadcast(query_nv), query_id)
@@ -714,8 +741,42 @@ def _pq_rerank(
             F.round(dot_product(F.col("__cnv"), F.col("__qnv")), rerank_round).alias("cosine"),
         )
     )
-    w = Window.partitionBy(query_id).orderBy(F.desc("cosine"), F.asc(corpus_id))
-    return exact.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _topk(exact, query_id, [F.desc("cosine"), F.asc(corpus_id)], k)
+
+
+def _pq_search(
+    corpus: DataFrame,
+    queries: DataFrame,
+    csub: DataFrame | None,
+    codebook: DataFrame,
+    m: int,
+    n_codes: int,
+    k: int,
+    rerank: int | None,
+    corpus_id: str,
+    corpus_vec: str,
+    query_id: str,
+    query_vec: str,
+    assign_round: int,
+    rank_round: int,
+    candidates: DataFrame | None = None,
+    codes: DataFrame | None = None,
+) -> DataFrame:
+    """ADC top-k over ``codebook`` (see :func:`_pq_encode_score`); with
+    ``rerank`` set, the top-``rerank`` ADC shortlist is re-ranked by exact
+    cosine (:func:`_pq_rerank`)."""
+    qsub = _pq_subvectors(
+        queries.select(F.col(query_id), F.col(query_vec)), query_id, query_vec, m
+    )
+    adc = _pq_encode_score(
+        csub, qsub, codebook, m, n_codes, k if rerank is None else rerank, corpus_id,
+        query_id, assign_round, rank_round, candidates=candidates, codes=codes,
+    )
+    if rerank is None:
+        return adc
+    corpus_nv = corpus.select(F.col(corpus_id), l2_normalize(F.col(corpus_vec)).alias("__cnv"))
+    query_nv = queries.select(F.col(query_id), l2_normalize(F.col(query_vec)).alias("__qnv"))
+    return _pq_rerank(adc.select(query_id, corpus_id), corpus_nv, query_nv, k, corpus_id, query_id)
 
 
 def pq_topk_deterministic(
@@ -750,11 +811,10 @@ def pq_topk_deterministic(
     code/vector-id tie breaks, so engines differing in last-ulp float
     formatting encode and rank identically.
     """
-    from instructionspipe_spark.session import ensure_parallelism, managed_persist
-
     corpus = ensure_parallelism(corpus)
     if codes_store is not None and codebook is None:
         raise ValueError("codes_store requires the codebook it was encoded with")
+    csub = None
     if codes_store is None:
         # Read by TWO branches (codebook seed join + encoding) — persist the
         # narrow subvector frame rather than normalizing the corpus twice.
@@ -764,38 +824,11 @@ def pq_topk_deterministic(
             )
         )
         if codebook is None:
-            # Codewords: subvectors of the n_codes lowest-id corpus vectors;
-            # code = rank of that id (tiny n_codes*m frame — the
-            # single-partition window is over n_codes rows, executed once).
-            seed_ids = (
-                corpus.select(F.col(corpus_id))
-                .orderBy(corpus_id)
-                .limit(n_codes)
-                .withColumn("__code", F.row_number().over(Window.orderBy(corpus_id)) - 1)
-            )
-            codebook = (
-                csub.join(F.broadcast(seed_ids), corpus_id)
-                .select("__j", "__code", F.col("__sub").alias("__cw"))
-            )
-    else:
-        csub = None
-    qsub = _pq_subvectors(
-        queries.select(F.col(query_id), F.col(query_vec)), query_id, query_vec, m
+            codebook = _seeded_codebook(csub, corpus, corpus_id, n_codes)
+    return _pq_search(
+        corpus, queries, csub, codebook, m, n_codes, k, rerank, corpus_id, corpus_vec,
+        query_id, query_vec, assign_round, rank_round, codes=codes_store,
     )
-    if rerank is None:
-        return _pq_encode_score(
-            csub, qsub, codebook, m, n_codes, k, corpus_id, query_id, assign_round,
-            rank_round, codes=codes_store,
-        )
-    shortlist = _pq_encode_score(
-        csub, qsub, codebook, m, n_codes, rerank, corpus_id, query_id, assign_round,
-        rank_round, codes=codes_store,
-    ).select(query_id, corpus_id)
-    from instructionspipe_spark.functions.vectors import l2_normalize
-
-    corpus_nv = corpus.select(F.col(corpus_id), l2_normalize(F.col(corpus_vec)).alias("__cnv"))
-    query_nv = queries.select(F.col(query_id), l2_normalize(F.col(query_vec)).alias("__qnv"))
-    return _pq_rerank(shortlist, corpus_nv, query_nv, k, corpus_id, query_id)
 
 
 def pq_topk(
@@ -822,41 +855,13 @@ def pq_topk(
     fixed seed. Encoding/ADC/ranking are byte-identical machinery to the
     oracle-gated :func:`pq_topk_deterministic`; the recall floor vs brute
     force is pytest-gated (tests/test_param_fuzz.py)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    from instructionspipe_spark.session import ensure_parallelism
-
     corpus = ensure_parallelism(corpus)
     csub = _pq_subvectors(corpus.select(F.col(corpus_id), F.col(corpus_vec)), corpus_id, corpus_vec, m)
-    csub_ml = csub.withColumn("__mlvec", array_to_vector(F.col("__sub").cast("array<double>")))
-    cb_rows = []
-    for j in range(m):
-        model = KMeans(
-            k=n_codes, seed=seed + j, maxIter=max_iter,
-            featuresCol="__mlvec", predictionCol="__cell",
-        ).fit(csub_ml.filter(F.col("__j") == j))
-        for code, center in enumerate(model.clusterCenters()):
-            cb_rows.append((j, code, [float(x) for x in center]))
-    spark = corpus.sparkSession
-    codebook = spark.createDataFrame(cb_rows, ["__j", "__code", "__cw"]).select(
-        "__j", "__code", F.col("__cw").cast("array<double>").alias("__cw")
+    codebook = _trained_codebook(csub, m, n_codes, seed, max_iter)
+    return _pq_search(
+        corpus, queries, csub, codebook, m, n_codes, k, rerank, corpus_id, corpus_vec,
+        query_id, query_vec, assign_round, rank_round,
     )
-    qsub = _pq_subvectors(
-        queries.select(F.col(query_id), F.col(query_vec)), query_id, query_vec, m
-    )
-    if rerank is None:
-        return _pq_encode_score(
-            csub, qsub, codebook, m, n_codes, k, corpus_id, query_id, assign_round, rank_round
-        )
-    shortlist = _pq_encode_score(
-        csub, qsub, codebook, m, n_codes, rerank, corpus_id, query_id, assign_round, rank_round
-    ).select(query_id, corpus_id)
-    from instructionspipe_spark.functions.vectors import l2_normalize
-
-    corpus_nv = corpus.select(F.col(corpus_id), l2_normalize(F.col(corpus_vec)).alias("__cnv"))
-    query_nv = queries.select(F.col(query_id), l2_normalize(F.col(query_vec)).alias("__qnv"))
-    return _pq_rerank(shortlist, corpus_nv, query_nv, k, corpus_id, query_id)
 
 
 def ivfadc_topk(
@@ -912,50 +917,17 @@ def ivfadc_topk(
     here); candidates are DISTINCT'd so a pair reachable through several
     shared cells is scored once.
     """
-    from instructionspipe_spark.functions.vectors import l2_normalize
-    from instructionspipe_spark.session import ensure_parallelism, managed_persist
-
     corpus = ensure_parallelism(corpus)
     c = corpus.select(F.col(corpus_id), l2_normalize(F.col(corpus_vec)).alias("__cnv"))
     if trained:
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        c_ml = c.withColumn("__mlvec", array_to_vector(F.col("__cnv").cast("array<double>")))
-        model = KMeans(
-            k=n_cells, seed=seed, maxIter=max_iter,
-            featuresCol="__mlvec", predictionCol="__cell",
-        ).fit(c_ml)
-        spark = corpus.sparkSession
-        cent = spark.createDataFrame(
-            [(i, [float(x) for x in ctr]) for i, ctr in enumerate(model.clusterCenters())],
-            ["__cell", "__cent"],
-        ).select("__cell", F.col("__cent").cast("array<double>").alias("__cent"))
+        cent = _trained_centroids(c, "__cnv", n_cells, seed, max_iter)
     else:
-        cent = (
-            c.orderBy(corpus_id)
-            .limit(n_cells)
-            .select(F.col(corpus_id).alias("__cell"), F.col("__cnv").alias("__cent"))
-        )
-
-    def assign(df: DataFrame, id_col: str, vec_col: str, n_keep: int) -> DataFrame:
-        from instructionspipe_spark.functions.vectors import dot_product
-
-        scored = df.crossJoin(F.broadcast(cent)).select(
-            F.col(id_col),
-            F.col("__cell"),
-            F.round(dot_product(F.col(vec_col), F.col("__cent")), assign_round).alias("__acos"),
-        )
-        w = Window.partitionBy(id_col).orderBy(F.desc("__acos"), F.asc("__cell"))
-        return (
-            scored.withColumn("__ar", F.row_number().over(w))
-            .filter(F.col("__ar") <= n_keep)
-            .select(id_col, "__cell")
-        )
-
+        cent = _seed_centroids(c, corpus_id, "__cnv", n_cells)
     q = queries.select(F.col(query_id), l2_normalize(F.col(query_vec)).alias("__qnv"))
-    candidates = assign(c, corpus_id, "__cnv", n_assign).join(
-        F.broadcast(assign(q, query_id, "__qnv", n_probe)), "__cell"
+    c_cells = _coarse_assign(c, corpus_id, "__cnv", cent, n_cells, n_assign, levels=1, round_digits=assign_round)
+    q_probes = _coarse_assign(q, query_id, "__qnv", cent, n_cells, n_probe, levels=1, round_digits=assign_round)
+    candidates = c_cells.select(corpus_id, "__cell").join(
+        F.broadcast(q_probes.select(query_id, "__cell")), "__cell"
     ).select(query_id, corpus_id)
     if n_assign > 1:
         # A pair can share several (corpus-cell × probed-cell) routes; score
@@ -967,43 +939,12 @@ def ivfadc_topk(
         _pq_subvectors(corpus.select(F.col(corpus_id), F.col(corpus_vec)), corpus_id, corpus_vec, m)
     )
     if trained:
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        csub_ml = csub.withColumn("__mlvec", array_to_vector(F.col("__sub").cast("array<double>")))
-        cb_rows = []
-        for j in range(m):
-            mdl = KMeans(
-                k=n_codes, seed=seed + 1 + j, maxIter=max_iter,
-                featuresCol="__mlvec", predictionCol="__cell",
-            ).fit(csub_ml.filter(F.col("__j") == j))
-            for code, center in enumerate(mdl.clusterCenters()):
-                cb_rows.append((j, code, [float(x) for x in center]))
-        codebook = corpus.sparkSession.createDataFrame(
-            cb_rows, ["__j", "__code", "__cw"]
-        ).select("__j", "__code", F.col("__cw").cast("array<double>").alias("__cw"))
+        codebook = _trained_codebook(csub, m, n_codes, seed + 1, max_iter)
     else:
-        seed_ids = (
-            corpus.select(F.col(corpus_id))
-            .orderBy(corpus_id)
-            .limit(n_codes)
-            .withColumn("__code", F.row_number().over(Window.orderBy(corpus_id)) - 1)
-        )
-        codebook = csub.join(F.broadcast(seed_ids), corpus_id).select(
-            "__j", "__code", F.col("__sub").alias("__cw")
-        )
-    qsub = _pq_subvectors(
-        queries.select(F.col(query_id), F.col(query_vec)), query_id, query_vec, m
-    )
-    shortlist_k = rerank if rerank is not None else k
-    adc = _pq_encode_score(
-        csub, qsub, codebook, m, n_codes, shortlist_k, corpus_id, query_id,
-        assign_round, rank_round, candidates=candidates,
-    )
-    if rerank is None:
-        return adc
-    return _pq_rerank(
-        adc.select(query_id, corpus_id), c, q.select(query_id, "__qnv"), k, corpus_id, query_id
+        codebook = _seeded_codebook(csub, corpus, corpus_id, n_codes)
+    return _pq_search(
+        corpus, queries, csub, codebook, m, n_codes, k, rerank, corpus_id, corpus_vec,
+        query_id, query_vec, assign_round, rank_round, candidates=candidates,
     )
 
 
@@ -1022,15 +963,7 @@ def pq_codebook_deterministic(
     csub = _pq_subvectors(
         corpus.select(F.col(corpus_id), F.col(corpus_vec)), corpus_id, corpus_vec, m
     )
-    seed_ids = (
-        corpus.select(F.col(corpus_id))
-        .orderBy(corpus_id)
-        .limit(n_codes)
-        .withColumn("__code", F.row_number().over(Window.orderBy(corpus_id)) - 1)
-    )
-    return csub.join(F.broadcast(seed_ids), corpus_id).select(
-        "__j", "__code", F.col("__sub").alias("__cw")
-    )
+    return _seeded_codebook(csub, corpus, corpus_id, n_codes)
 
 
 def pq_encode(
@@ -1087,6 +1020,48 @@ def _sq_encode(vec: Column, mns: Column, mxs: Column) -> Column:
     return F.transform(vec, enc)
 
 
+def _sq_shortlist(
+    c_cells: DataFrame,
+    q_cells: DataFrame,
+    stats: DataFrame,
+    rerank: int,
+    corpus_id: str,
+    query_id: str,
+    collapse: bool,
+) -> DataFrame:
+    """(query_id, corpus_id): per query, the ``rerank`` corpus vectors of
+    its probed cells nearest in SQ8 code space. Both sides are encoded with
+    the same broadcast ``stats`` and scored by the symmetric integer
+    distance sum((qcode_i - code_i)^2); the (tiny, broadcast) encoded probes
+    join the corpus cells on the cell id. ``collapse``: under multiple
+    assignment the same pair surfaces through two shared cells — keep one
+    (the distances agree)."""
+    enc_c = c_cells.crossJoin(F.broadcast(stats)).select(
+        F.col(corpus_id),
+        F.col("__cell"),
+        _sq_encode(F.col("__cnv"), F.col("__mns"), F.col("__mxs")).alias("__codes"),
+    )
+    enc_q = q_cells.crossJoin(F.broadcast(stats)).select(
+        F.col(query_id),
+        F.col("__cell"),
+        _sq_encode(F.col("__qnv"), F.col("__mns"), F.col("__mxs")).alias("__qcodes"),
+    )
+    d2 = enc_c.join(F.broadcast(enc_q), "__cell").select(
+        F.col(query_id),
+        F.col(corpus_id),
+        F.aggregate(
+            F.zip_with(F.col("__qcodes"), F.col("__codes"), lambda a, b: (a - b) * (a - b)),
+            F.lit(0).cast("long"),
+            lambda acc, x: acc + x,
+        ).alias("__d2"),
+    )
+    if collapse:
+        d2 = d2.groupBy(query_id, corpus_id).agg(F.min("__d2").alias("__d2"))
+    return _topk(d2, query_id, [F.asc("__d2"), F.asc(corpus_id)], rerank, "__r").select(
+        query_id, corpus_id
+    )
+
+
 def ivfsq_topk_deterministic(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1122,65 +1097,18 @@ def ivfsq_topk_deterministic(
     (tiny, broadcast) encoded probes to the candidate cells on the cell id
     — the corpus-sized side streams, only codes cross the operator, and the
     full-precision vectors are read for rerank rows alone."""
-    from instructionspipe_spark.functions.vectors import dot_product, l2_normalize
-    from instructionspipe_spark.session import ensure_parallelism, managed_persist
-
     corpus = ensure_parallelism(corpus)
-    c = corpus.select(F.col(corpus_id), l2_normalize(F.col(corpus_vec)).alias("__cnv"))
     # Read by three branches (centroid seed, stats, encoding) — persist the
     # narrow normalized frame once.
-    c = managed_persist(c)
-    cent = (
-        c.orderBy(corpus_id)
-        .limit(n_cells)
-        .select(F.col(corpus_id).alias("__cell"), F.col("__cnv").alias("__cent"))
+    c = managed_persist(
+        corpus.select(F.col(corpus_id), l2_normalize(F.col(corpus_vec)).alias("__cnv"))
     )
-
-    def assign(df: DataFrame, id_col: str, vec_col: str, n_keep: int) -> DataFrame:
-        scored = df.crossJoin(F.broadcast(cent)).select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.col("__cell"),
-            F.round(dot_product(F.col(vec_col), F.col("__cent")), assign_round).alias("__acos"),
-        )
-        w = Window.partitionBy(id_col).orderBy(F.desc("__acos"), F.asc("__cell"))
-        return (
-            scored.withColumn("__ar", F.row_number().over(w))
-            .filter(F.col("__ar") <= n_keep)
-            .drop("__acos", "__ar")
-        )
-
-    stats = _sq_stats(c)
-    c_cells = assign(c, corpus_id, "__cnv", 1)
-    enc_c = c_cells.crossJoin(F.broadcast(stats)).select(
-        F.col(corpus_id),
-        F.col("__cell"),
-        _sq_encode(F.col("__cnv"), F.col("__mns"), F.col("__mxs")).alias("__codes"),
-    )
+    cent = _seed_centroids(c, corpus_id, "__cnv", n_cells)
     q = queries.select(F.col(query_id), l2_normalize(F.col(query_vec)).alias("__qnv"))
-    q_probes = assign(q, query_id, "__qnv", n_probe)
-    enc_q = q_probes.crossJoin(F.broadcast(stats)).select(
-        F.col(query_id),
-        F.col("__cell"),
-        _sq_encode(F.col("__qnv"), F.col("__mns"), F.col("__mxs")).alias("__qcodes"),
-    )
-    d2 = (
-        enc_c.join(F.broadcast(enc_q), "__cell")
-        .select(
-            F.col(query_id),
-            F.col(corpus_id),
-            F.aggregate(
-                F.zip_with(F.col("__qcodes"), F.col("__codes"), lambda a, b: (a - b) * (a - b)),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ).alias("__d2"),
-        )
-    )
-    w = Window.partitionBy(query_id).orderBy(F.asc("__d2"), F.asc(corpus_id))
-    shortlist = (
-        d2.withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") <= rerank)
-        .select(query_id, corpus_id)
+    shortlist = _sq_shortlist(
+        _coarse_assign(c, corpus_id, "__cnv", cent, n_cells, levels=1, round_digits=assign_round),
+        _coarse_assign(q, query_id, "__qnv", cent, n_cells, n_probe, levels=1, round_digits=assign_round),
+        _sq_stats(c), rerank, corpus_id, query_id, collapse=False,
     )
     return _pq_rerank(shortlist, c, q, k, corpus_id, query_id)
 
@@ -1210,52 +1138,8 @@ def ivfsq_topk(
     non-SQL-expressible, so the driver-gated contract is the bounded
     recall row (`ivfsq_trained_recall`), exactly the N33 pattern used for
     trained IVFADC/PQ."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    from instructionspipe_spark.functions.vectors import l2_normalize
-    from instructionspipe_spark.session import ensure_parallelism, managed_persist
-
     corpus = ensure_parallelism(corpus)
-    c_vec = corpus.select(
-        F.col(corpus_id), F.col(corpus_vec),
-        array_to_vector(F.col(corpus_vec).cast("array<double>")).alias("__mlvec"),
-    )
-    model = KMeans(
-        k=n_cells, seed=seed, maxIter=max_iter,
-        featuresCol="__mlvec", predictionCol="__cell",
-    ).fit(c_vec)
-    centers = [list(map(float, c)) for c in model.clusterCenters()]
-    centers_col = F.array(*[
-        F.struct(F.lit(i).alias("cell"), F.array(*[F.lit(x) for x in c]).alias("center"))
-        for i, c in enumerate(centers)
-    ])
-
-    def nearest_cells(df: DataFrame, raw_vec: Column, n_keep: int) -> DataFrame:
-        """Explode each row into its n_keep nearest cells (L2 to the literal
-        centroid array — the ivf_topk probe expression, reused for corpus
-        multiple assignment)."""
-        return df.withColumn(
-            "__cells",
-            F.slice(
-                F.array_sort(
-                    F.transform(
-                        centers_col,
-                        lambda s: F.struct(
-                            F.aggregate(
-                                F.zip_with(raw_vec, s["center"], lambda a, b: (a - b) * (a - b)),
-                                F.lit(0.0),
-                                lambda acc, x: acc + x,
-                            ).alias("dist"),
-                            s["cell"].alias("cell"),
-                        ),
-                    )
-                ),
-                1,
-                n_keep,
-            ),
-        ).select(*df.columns, F.explode(F.col("__cells")["cell"]).alias("__cell"))
-
+    centers = _kmeans_centers(corpus, corpus_vec, n_cells, seed, max_iter)
     c_norm = managed_persist(
         corpus.select(
             F.col(corpus_id),
@@ -1263,48 +1147,19 @@ def ivfsq_topk(
             F.col(corpus_vec).cast("array<double>").alias("__cv"),
         )
     )
-    c_cells = nearest_cells(c_norm, F.col("__cv"), n_assign).select(
+    c_cells = _nearest_literal_cells(c_norm, F.col("__cv"), centers, n_assign).select(
         corpus_id, "__cnv", "__cell"
     )
-    stats = _sq_stats(c_norm)
-    enc_c = c_cells.crossJoin(F.broadcast(stats)).select(
-        F.col(corpus_id),
-        F.col("__cell"),
-        _sq_encode(F.col("__cnv"), F.col("__mns"), F.col("__mxs")).alias("__codes"),
-    )
-
     q = queries.select(
         F.col(query_id),
         l2_normalize(F.col(query_vec)).alias("__qnv"),
         F.col(query_vec).cast("array<double>").alias("__qv"),
     )
-    probed = nearest_cells(q, F.col("__qv"), n_probe).select(query_id, "__qnv", "__cell")
-    enc_q = probed.crossJoin(F.broadcast(stats)).select(
-        F.col(query_id),
-        F.col("__cell"),
-        _sq_encode(F.col("__qnv"), F.col("__mns"), F.col("__mxs")).alias("__qcodes"),
+    probed = _nearest_literal_cells(q, F.col("__qv"), centers, n_probe).select(
+        query_id, "__qnv", "__cell"
     )
-    d2 = (
-        enc_c.join(F.broadcast(enc_q), "__cell")
-        .select(
-            F.col(query_id),
-            F.col(corpus_id),
-            F.aggregate(
-                F.zip_with(F.col("__qcodes"), F.col("__codes"), lambda a, b: (a - b) * (a - b)),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ).alias("__d2"),
-        )
-        # multiple assignment can surface the same (query, vec) pair through
-        # two shared cells — collapse before ranking (the distances agree)
-        .groupBy(query_id, corpus_id)
-        .agg(F.min("__d2").alias("__d2"))
-    )
-    w = Window.partitionBy(query_id).orderBy(F.asc("__d2"), F.asc(corpus_id))
-    shortlist = (
-        d2.withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") <= rerank)
-        .select(query_id, corpus_id)
+    shortlist = _sq_shortlist(
+        c_cells, probed, _sq_stats(c_norm), rerank, corpus_id, query_id, collapse=True
     )
     corpus_nv = c_norm.select(F.col(corpus_id), F.col("__cnv"))
     return _pq_rerank(shortlist, corpus_nv, q.select(F.col(query_id), F.col("__qnv")), k, corpus_id, query_id)

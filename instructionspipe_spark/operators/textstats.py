@@ -46,11 +46,6 @@ def stopword_ratio_from_tokens(toks: Column, lang: str) -> Column:
     )
 
 
-def stopword_ratio(text: Column, lang: str) -> Column:
-    """Fraction of tokens that are stopwords of ``lang``."""
-    return stopword_ratio_from_tokens(_lower_tokens(text), lang)
-
-
 def detect_language_from_tokens(toks: Column, langs: list[str] | None = None) -> Column:
     """argmax over per-language stopword ratios of a pre-tokenized column;
     'und' (undetermined) when no stopword hits at all. Ties resolve to the

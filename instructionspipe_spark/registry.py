@@ -632,14 +632,6 @@ def _norm_sql(col: str) -> str:
     )
 
 
-def _shingles_sql(col: str, n: int = 3) -> str:
-    """SQL mirror of distinct char n-grams over the normalized text."""
-    norm = _norm_sql(col)
-    return (
-        f"list_distinct([substr(t.__norm, i, {n}) for i in range(1, greatest(len(t.__norm) - {n - 1}, 0) + 1)])"
-    ), norm
-
-
 def _hash48_sql(expr: str) -> str:
     """SQL mirror of operators.dedup.base_hash48."""
     return f"CAST('0x' || substr(md5({expr}), 1, 12) AS BIGINT)"

@@ -15,7 +15,17 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
+
+
+def _default_driver_mem() -> str:
+    """Local driver heap sized to the host: about 60% of physical RAM,
+    capped at 16g, leaving the rest to the Python workers and the OS."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):  # no sysconf: keep the cap
+        return "16g"
+    return f"{min(16 * 1024, int(phys * 0.6) >> 20)}m"
 
 
 def get_spark(
@@ -62,16 +72,17 @@ def get_spark(
     elif not os.environ.get("SPARK_GRAFT_NO_LOCAL_MASTER"):
         builder = builder.master(f"local[{cpus}]")
     # Local-mode driver heap: PySpark's in-process JVM defaults to 1g — a
-    # 32-thread local executor outgrows that on large inputs (the sf10
+    # many-thread local executor outgrows that on large inputs (the sf10
     # scale probe OOMed it), and per-suite memory pressure shows up as
-    # timing drift. 16g is ~1/8 of the target box (local[32] / 128 GiB),
-    # leaving ample room for the 32 Python workers. Only applied when THIS
+    # timing drift. The default is ~60% of physical RAM capped at 16g, so
+    # the heap never asks for more than the box has. Only applied when THIS
     # call launches the JVM (local master, fresh process); on a real
     # cluster spark-submit owns the sizing. SPARK_GRAFT_DRIVER_MEM
     # overrides (the sf10 probe uses 48g).
     if master is None and not os.environ.get("SPARK_GRAFT_NO_LOCAL_MASTER"):
         builder = builder.config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
         )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

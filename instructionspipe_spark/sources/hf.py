@@ -127,12 +127,6 @@ def read_arrow_ipc(
     return binaries.select("content").mapInPandas(decode, schema=schema)
 
 
-def _glob_match(name: str, glob: str) -> bool:
-    import fnmatch
-
-    return fnmatch.fnmatch(name, glob)
-
-
 def _hadoop_ls(spark: SparkSession, path: str) -> list[str] | None:
     """List a directory through the Hadoop FS API so `s3a://`-style paths
     behave like local ones. Returns None when `path` is not a listable

@@ -61,11 +61,13 @@ def test_async_kernel_bounded_concurrency(spark):
 
 class _Recorder:
     """Canned chat.completions.create: pops scripted (finish_reason, content)
-    responses and records every request's params."""
+    responses and records every request's params, plus the client
+    constructor's keyword arguments."""
 
     def __init__(self, script):
         self.script = list(script)
         self.calls = []
+        self.client_kwargs = {}
 
     async def create(self, **kwargs):
         import types
@@ -86,13 +88,20 @@ def _fake_openai(monkeypatch, script):
     rec = _Recorder(script)
 
     class FakeAsyncOpenAI:
-        def __init__(self, base_url=None, api_key=None):
+        def __init__(self, base_url=None, api_key=None, max_retries=None, timeout=None):
+            rec.client_kwargs = {"max_retries": max_retries, "timeout": timeout}
             self.chat = types.SimpleNamespace(
                 completions=types.SimpleNamespace(create=rec.create)
             )
 
     monkeypatch.setitem(sys.modules, "openai", types.SimpleNamespace(AsyncOpenAI=FakeAsyncOpenAI))
     return rec
+
+
+def _assert_single_retry_policy(rec, llm):
+    """The SDK's own retries are off and its timeout is the kernel's, so the
+    kernel's transport ladder is the only retry policy."""
+    assert rec.client_kwargs == {"max_retries": 0, "timeout": llm.request_timeout}
 
 
 def _run(coro):
@@ -109,8 +118,10 @@ def test_openai_replay_no_retry(monkeypatch):
     from instructionspipe_spark.plans.llm_kernel import OpenAiLlm
 
     rec = _fake_openai(monkeypatch, [("stop", "fine")])
-    one = OpenAiLlm(model="m", temperature=0.3)._make_completer()
+    llm = OpenAiLlm(model="m", temperature=0.3)
+    one = llm._make_completer()
     assert _run(one(None, "hi")) == "fine"
+    _assert_single_retry_policy(rec, llm)
     assert len(rec.calls) == 1
     c = rec.calls[0]
     assert c["temperature"] == 0.3 and c["frequency_penalty"] == 0.0
@@ -122,8 +133,10 @@ def test_openai_replay_length_escalation(monkeypatch):
     from instructionspipe_spark.plans.llm_kernel import OpenAiLlm
 
     rec = _fake_openai(monkeypatch, [("length", "trunc"), ("stop", "full")])
-    one = OpenAiLlm(model="m")._make_completer()
+    llm = OpenAiLlm(model="m", request_timeout=7.5)
+    one = llm._make_completer()
     assert _run(one(None, "hi")) == "full"
+    _assert_single_retry_policy(rec, llm)
     assert len(rec.calls) == 2
     assert rec.calls[0]["temperature"] == 0.0 and rec.calls[0]["frequency_penalty"] == 0.0
     assert rec.calls[1]["temperature"] == 1.0 and rec.calls[1]["frequency_penalty"] == 0.2
@@ -137,8 +150,10 @@ def test_openai_replay_budget_exhausted(monkeypatch):
         monkeypatch,
         [("length", "t1"), ("length", "t2"), ("length", "t3"), ("length", "t4"), ("stop", "never")],
     )
-    one = OpenAiLlm(model="m", length_retries=3)._make_completer()
+    llm = OpenAiLlm(model="m", length_retries=3)
+    one = llm._make_completer()
     assert _run(one(None, "hi")) == "t4"
+    _assert_single_retry_policy(rec, llm)
     assert len(rec.calls) == 4  # initial + 3 retries, never a 5th
 
 
@@ -151,8 +166,10 @@ def test_openai_replay_response_format_passthrough(monkeypatch):
 
     env = response_format_envelope("ans", {"type": "object", "properties": {"a": {"type": "string"}}})
     rec = _fake_openai(monkeypatch, [("length", "t"), ("stop", '{"a": "x"}')])
-    one = OpenAiLlm(model="m", response_format_json=json.dumps(env))._make_completer()
+    llm = OpenAiLlm(model="m", response_format_json=json.dumps(env))
+    one = llm._make_completer()
     assert _run(one(None, "hi")) == '{"a": "x"}'
+    _assert_single_retry_policy(rec, llm)
     assert [c["response_format"] for c in rec.calls] == [env, env]
 
 

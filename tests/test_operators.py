@@ -458,6 +458,54 @@ def test_shingle_kernels_large_document(spark):
         assert expr == arrow
 
 
+_RESTART_PROBE = """
+from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
+
+from instructionspipe_spark.operators.dedup import minhash_signature
+
+DOCS = [(i, f"document number {i} about spark sessions " * (1 + i % 3)) for i in range(40)]
+
+
+def run():
+    spark = SparkSession.builder.master("local[2]").appName("restart-probe").getOrCreate()
+    df = spark.createDataFrame(DOCS, "doc_id long, text string")
+    sig = minhash_signature(F.col("text")).alias("sig")
+    out = sorted((r["doc_id"], tuple(r["sig"])) for r in df.select("doc_id", sig).collect())
+    spark.stop()
+    return out
+
+
+first = run()
+second = run()
+assert first == second, "signatures differ after a session restart"
+print("RESTART_OK")
+"""
+
+
+def test_arrow_kernel_survives_session_restart():
+    """Build a session, run the Arrow minhash kernel, stop the session,
+    build a new one in the same process and run it again: the second run
+    must equal the first, and no task may fail to report back to the
+    stopped context (a UDF memoized across sessions stays bound to the old
+    SparkContext's accumulator server and logs a broken pipe per task).
+    A subprocess gets its own JVM, so the suite's session is untouched."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    path = [repo] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(path))
+    proc = subprocess.run(
+        [sys.executable, "-c", _RESTART_PROBE],
+        capture_output=True, text=True, timeout=300, cwd=repo, env=env,
+    )
+    detail = f"stdout:\n{proc.stdout}\nstderr:\n{proc.stderr[-3000:]}"
+    assert "RESTART_OK" in proc.stdout, detail
+    assert "Failed to update accumulator" not in proc.stderr, detail
+
+
 def test_doc_fingerprint_engines_identical(spark):
     from instructionspipe_spark.operators.textstats import doc_fingerprint
 

@@ -12,11 +12,11 @@ import __spark_entry__ as entrymod
 SF = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
-def _plan(spark, name: str) -> str:
+def _plan(spark, name: str, mode: str = "formatted") -> str:
     df = entrymod.queries()[name](spark, SF)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
+        df.explain(mode)
     return buf.getvalue()
 
 
@@ -146,6 +146,37 @@ def test_topk_diagnostics_never_global_sort(spark):
         "lsh_bucket_stats rank<=k stopped firing WindowGroupLimit — its "
         "per-band window now sorts whole bands on single tasks"
     )
+
+
+def test_coarse_assignment_cuts_map_side(spark):
+    """The coarse quantizer's argmax (similarity._coarse_assign) ranks every
+    vector against the broadcast centroids; the n x k scored rows must be
+    cut to the kept few per vector BEFORE the shuffle on the vector id — a
+    Partial WindowGroupLimit directly under that hash exchange. Pinned for
+    SemDeDup and IVF, each with flat and two-level routing: if a refactor
+    drops the cut, every scored row crosses the exchange."""
+
+    def map_side_cuts(plan: str, key: str) -> list[str]:
+        lines = plan.splitlines()
+        return [
+            nxt
+            for cur, nxt in zip(lines, lines[1:])
+            if f"Exchange hashpartitioning({key}#" in cur
+            and "WindowGroupLimit" in nxt
+            and nxt.rstrip().endswith("Partial")
+        ]
+
+    for name, key in (
+        ("semantic_dedup", "__id"),
+        ("semantic_dedup_two_level", "__id"),
+        ("similarity_ivf_two_level_topk", "vec_id"),
+        ("similarity_ivf_topk", "vec_id"),
+    ):
+        plan = _plan(spark, name, "simple")
+        assert map_side_cuts(plan, key), (
+            f"{name}: no Partial WindowGroupLimit under the hash exchange on "
+            f"{key} — the coarse assignment now shuffles every scored row"
+        )
 
 
 def test_broadcast_if_small_is_stats_gated(spark, tables):
