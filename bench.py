@@ -293,7 +293,7 @@ def bench_skew() -> int:
 
     def pairs_two_phase(with_sig):
         # Mirrors the SHIPPED _sig_band_pairs: banded persisted, two-phase min.
-        banded = _banded_frame(with_sig, bands, rows_per_band).persist()
+        banded = _banded_frame(with_sig, bands, bands * rows_per_band).persist()
         reps = banded.groupBy("__band_idx", "__band_hash").agg(F.min("__id").alias("__min_id"))
         return banded, (
             banded.join(reps, ["__band_idx", "__band_hash"])
@@ -303,7 +303,7 @@ def bench_skew() -> int:
 
     def pairs_window(with_sig):
         # Pre-round-4 formulation (single consumer: no persist needed).
-        banded = _banded_frame(with_sig, bands, rows_per_band)
+        banded = _banded_frame(with_sig, bands, bands * rows_per_band)
         w = Window.partitionBy("__band_idx", "__band_hash")
         return None, (
             banded.withColumn("__min_id", F.min("__id").over(w))

@@ -19,8 +19,13 @@ operator here is oracle-checkable.
 
 Two execution engines per fingerprint, identical results (asserted in tests):
 
-- ``engine="expr"`` — pure Catalyst expressions (sequence/transform/aggregate).
-  No Python workers at all; the fallback for JVM-only deployments.
+- ``engine="expr"`` — pure Catalyst expressions (sequence/transform/aggregate)
+  for signing AND jaccard verification (``_verified`` picks both from
+  ``engine``), so every banded operator — ``streaming_band_matches`` and
+  ``graph.near_dup_components`` included — runs without Python workers; the
+  fallback for JVM-only deployments. The one exception is
+  ``minhash_lsh_dedup_most_dup``, whose per-component sequential greedy is
+  an ``applyInPandas`` under either engine.
 - ``engine="arrow"`` (default) — normalization stays a JVM regex, then one
   Arrow-batched pandas UDF computes shingles + md5 + signature with a
   per-batch shingle vocabulary (shingles are Zipfian, so each distinct
@@ -298,6 +303,82 @@ def minhash_signature_from_shingles(shingles: Column, num_perm: int = 16) -> Col
     )
 
 
+# ---------------------------------------------------------------------------
+# One sign -> band -> cap -> verify path. Every banded operator here, the
+# streaming twin and graph.near_dup_components go through these helpers;
+# new LSH operators must too, never a copy of the band hash or the join.
+# ---------------------------------------------------------------------------
+
+def _signed(
+    df: DataFrame, id_col: str, text_col: str, num_perm: int, ngram: int, engine: str,
+    *extra: Column,
+) -> DataFrame:
+    """The signing projection ``(__id, *extra, __sig)``; ``extra`` columns
+    ride through :func:`_banded_frame` untouched."""
+    sig = minhash_signature(F.col(text_col), num_perm=num_perm, ngram=ngram, engine=engine)
+    return df.select(F.col(id_col).alias("__id"), *extra, sig.alias("__sig"))
+
+
+def _banded_frame(with_sig: DataFrame, bands: int, num_perm: int) -> DataFrame:
+    """One row per (doc, band): every column but ``__sig``, plus
+    ``__band_idx`` and ``__band_hash``. Stage order matters: explode the
+    cheap band INDEX, then hash the signature slice per exploded row
+    (exploding a precomputed band-hash array would put the nested lambda
+    under Generate, interpreted, ~5x slower). NULL-signature rows (no
+    shingles) are dropped: they never pair.
+
+    ``bands`` outside ``[1, num_perm]`` is rejected here, at build time:
+    more bands than permutations leaves zero rows per band, every band hash
+    becomes ``md5("<b>|")`` and every document shares every bucket."""
+    if not 1 <= bands <= num_perm:
+        raise ValueError(
+            f"MinHash banding needs 1 <= bands <= num_perm, got bands={bands}, "
+            f"num_perm={num_perm}"
+        )
+    rows_per_band = num_perm // bands
+    keep = [c for c in with_sig.columns if c != "__sig"]
+    exploded = with_sig.select(
+        "*", F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("__band_idx")
+    )
+    return exploded.select(
+        *keep,
+        "__band_idx",
+        F.md5(
+            F.concat(
+                F.col("__band_idx").cast("string"),
+                F.lit("|"),
+                F.array_join(
+                    F.transform(
+                        F.slice(F.col("__sig"), F.col("__band_idx") * rows_per_band + 1, rows_per_band),
+                        lambda v: v.cast("string"),
+                    ),
+                    ",",
+                ),
+            )
+        ).alias("__band_hash"),
+    ).filter(F.col("__band_hash").isNotNull())
+
+
+def _bucket_sizes(banded: DataFrame) -> DataFrame:
+    """The bucket census ``(__band_idx, __band_hash, __bc)``: one count
+    with map-side partials, so a mega-bucket collapses per task."""
+    return banded.groupBy("__band_idx", "__band_hash").agg(F.count(F.lit(1)).alias("__bc"))
+
+
+def _capped(banded: DataFrame, bucket_cap: int | None) -> DataFrame:
+    """``banded`` without the rows of buckets holding more than
+    ``bucket_cap`` members (``None``: uncapped). A hot bucket is
+    boilerplate mass, not near-dup signal (DEFAULT_BUCKET_CAP). Recall cost:
+    a true near-dup pair is missed only if EVERY band it collides on is
+    over-cap — both docs template-saturated, the regime SCALE.md says to
+    template-strip first. The cap only prunes candidates; verification
+    semantics are unchanged."""
+    if bucket_cap is None:
+        return banded
+    under = _bucket_sizes(banded).filter(F.col("__bc") <= bucket_cap)
+    return banded.join(under.select("__band_idx", "__band_hash"), ["__band_idx", "__band_hash"])
+
+
 def minhash_lsh_candidates(
     df: DataFrame,
     id_col: str,
@@ -316,7 +397,7 @@ def minhash_lsh_candidates(
     all-pairs candidates), and representative pairing makes candidate count
     linear in input size while still dropping every bucket member that
     verifies against the representative. Plan shape: narrow projection ->
-    persist (__id, __sig) -> posexplode bands -> two-phase min over
+    posexplode bands -> persist banded -> two-phase min over
     (band_idx, band_hash) (map-side partial agg + AQE-splittable join-back;
     skew-immune, see _sig_band_pairs) -> filter.
 
@@ -329,41 +410,11 @@ def minhash_lsh_candidates(
     from instructionspipe_spark.session import ensure_parallelism
 
     df = ensure_parallelism(df)
-    sig = minhash_signature(F.col(text_col), num_perm=num_perm, ngram=ngram, engine=engine)
-    with_sig = df.select(F.col(id_col).alias("__id"), sig.alias("__sig"))
-    return _sig_band_pairs(with_sig, bands, num_perm // bands)
-
-
-def _banded_frame(with_sig: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
-    """(__id, __band_idx, __band_hash) — one row per (doc, band). Stage
-    order matters: explode the cheap band INDEX, then hash the signature
-    slice per exploded row (exploding a precomputed band-hash array would
-    put the nested lambda under Generate, interpreted, ~5x slower).
-    NULL-signature rows (no shingles) are dropped: they never pair."""
-    exploded = with_sig.select(
-        "__id", "__sig", F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("__band_idx")
-    )
-    return exploded.select(
-        "__id",
-        "__band_idx",
-        F.md5(
-            F.concat(
-                F.col("__band_idx").cast("string"),
-                F.lit("|"),
-                F.array_join(
-                    F.transform(
-                        F.slice(F.col("__sig"), F.col("__band_idx") * rows_per_band + 1, rows_per_band),
-                        lambda v: v.cast("string"),
-                    ),
-                    ",",
-                ),
-            )
-        ).alias("__band_hash"),
-    ).filter(F.col("__band_hash").isNotNull())
+    return _sig_band_pairs(_signed(df, id_col, text_col, num_perm, ngram, engine), bands, num_perm)
 
 
 def _sig_band_pairs(
-    with_sig: DataFrame, bands: int, rows_per_band: int, distinct: bool = True
+    with_sig: DataFrame, bands: int, num_perm: int, distinct: bool = True
 ) -> DataFrame:
     """Bucket-representative candidate pairs from an (__id, __sig) frame
     (banding/stage-order rationale: _banded_frame).
@@ -383,7 +434,7 @@ def _sig_band_pairs(
     # measured as the bulk of the two-phase constant factor. Banded is
     # narrow — (id, band_idx, 32-char hash) ~60 B/row — so caching it costs
     # far less than the corpus text it came from (MEMORY_AND_DISK default).
-    banded = managed_persist(_banded_frame(with_sig, bands, rows_per_band))
+    banded = managed_persist(_banded_frame(with_sig, bands, num_perm))
     # Two-phase min, NOT a window: Window.partitionBy(band, hash) puts every
     # row of a hot bucket on ONE task — a boilerplate-heavy corpus with
     # millions of identical signatures makes that a straggler no AQE can
@@ -416,6 +467,49 @@ def jaccard(shingles_a: Column, shingles_b: Column) -> Column:
     return F.when(union > 0, inter.cast("double") / union.cast("double"))
 
 
+def _verify_repr(text: Column, ngram: int, engine: str) -> Column:
+    """What verification compares per document: the normalized text for
+    the Arrow jaccard kernel, the raw char n-gram array for the expression
+    :func:`jaccard` (which distincts internally: one pass per side)."""
+    return shingle_normalize(text) if engine == "arrow" else char_ngrams(text, n=ngram)
+
+
+def _verified(
+    pairs: DataFrame, a: tuple, b: tuple, ngram: int, engine: str, threshold: float,
+    hint_b: bool = False,
+) -> DataFrame:
+    """``(a_key, b_key, jaccard)`` for the candidate ``pairs`` whose exact
+    n-gram jaccard, rounded to 6 places, is ``>= threshold``.
+
+    ``a`` and ``b`` are ``(key, frame, id_col, text_col)``: each side's
+    :func:`_verify_repr` is projected from ``frame`` and joined onto
+    ``pairs`` by ``key``, ``a`` first, ``b`` through ``broadcast_if_small``
+    when ``hint_b``. A side whose frame is ``None`` already rides on
+    ``pairs`` as ``__v<key>`` (the streaming twin: re-joining the stream
+    would be a stream-stream join).
+
+    Under the Arrow engine sides join the normalized TEXT, not shingle
+    arrays: the shingle array is ~10x the text it came from, so shuffling
+    it loses to re-deriving shingle sets inside the kernel per pair. The
+    rounded value is what the filter compares, so an emitted ``jaccard``
+    never reads below ``threshold``. The pair
+    frame is bounded by the near-duplicate count, so AQE broadcasts it and
+    the corpus side streams."""
+    from instructionspipe_spark.session import broadcast_if_small
+
+    for (key, frame, idc, txtc), hint in ((a, False), (b, hint_b)):
+        if frame is not None:
+            side = frame.select(
+                F.col(idc).alias(key), _verify_repr(F.col(txtc), ngram, engine).alias("__v" + key)
+            )
+            pairs = pairs.join(broadcast_if_small(side) if hint else side, key)
+    va, vb = F.col("__v" + a[0]), F.col("__v" + b[0])
+    jac = _jaccard_kernel(ngram)(va, vb) if engine == "arrow" else jaccard(va, vb)
+    return pairs.select(a[0], b[0], F.round(jac, 6).alias("jaccard")).filter(
+        F.col("jaccard") >= F.lit(threshold)
+    )
+
+
 def minhash_lsh_dedup(
     df: DataFrame,
     id_col: str,
@@ -427,16 +521,10 @@ def minhash_lsh_dedup(
     engine: str = "arrow",
 ) -> DataFrame:
     """Drop near-duplicates: for every candidate pair (optionally verified at
-    ``jaccard >= threshold``), the row with the larger id is removed. The
-    survivor choice (min id) replaces the reference's insertion-order rule
-    with a deterministic one. Left-anti join keeps the plan shuffle-minimal.
-
-    Verification joins the (small) candidate-pair frame back to the
-    normalized TEXT, not to precomputed shingle arrays: the shingle array is
-    ~10x the text it came from, so shuffling/persisting it loses to
-    re-deriving shingle sets inside the Arrow jaccard kernel per pair. The
-    pair frame is bounded by the near-duplicate count, so AQE picks a
-    broadcast join and the corpus side streams — no wide shuffle at scale.
+    ``jaccard >= threshold``, see :func:`_verified`), the row with the
+    larger id is removed. The survivor choice (min id) replaces the
+    reference's insertion-order rule with a deterministic one. Left-anti
+    join keeps the plan shuffle-minimal.
 
     Persist lifecycle: intermediates are cached via
     ``session.managed_persist`` and freed by the NEXT registry-query build;
@@ -447,29 +535,16 @@ def minhash_lsh_dedup(
     from instructionspipe_spark.session import ensure_parallelism
 
     df = ensure_parallelism(df)
-    sig = minhash_signature(F.col(text_col), num_perm=num_perm, ngram=ngram, engine=engine)
-    with_sig = df.select(F.col(id_col).alias("__id"), sig.alias("__sig"))
     # distinct=False: the loser-id set is distinct'd below, so deduping the
     # pair frame here would only add an exchange.
-    pairs = _sig_band_pairs(with_sig, bands, num_perm // bands, distinct=False)
+    pairs = _sig_band_pairs(
+        _signed(df, id_col, text_col, num_perm, ngram, engine), bands, num_perm, distinct=False
+    )
     if threshold is not None:
-        if engine == "arrow":
-            nrm_a = df.select(F.col(id_col).alias("id_a"), shingle_normalize(F.col(text_col)).alias("__na"))
-            nrm_b = df.select(F.col(id_col).alias("id_b"), shingle_normalize(F.col(text_col)).alias("__nb"))
-            verify = _jaccard_kernel(ngram)(F.col("__na"), F.col("__nb")) >= F.lit(threshold)
-        else:
-            # jaccard() distincts internally; passing raw char_ngrams keeps
-            # exactly one array_distinct pass per side, not two.
-            nrm_a = df.select(
-                F.col(id_col).alias("id_a"),
-                char_ngrams(F.col(text_col), n=ngram).alias("__na"),
-            )
-            nrm_b = df.select(
-                F.col(id_col).alias("id_b"),
-                char_ngrams(F.col(text_col), n=ngram).alias("__nb"),
-            )
-            verify = jaccard(F.col("__na"), F.col("__nb")) >= F.lit(threshold)
-        pairs = pairs.join(nrm_a, "id_a").join(nrm_b, "id_b").filter(verify).select("id_a", "id_b")
+        pairs = _verified(
+            pairs, ("id_a", df, id_col, text_col), ("id_b", df, id_col, text_col),
+            ngram, engine, threshold,
+        )
     losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
     return df.join(losers, id_col, "left_anti")
 
@@ -596,22 +671,16 @@ def minhash_lsh_dedup_most_dup(
     from instructionspipe_spark.session import ensure_parallelism
 
     df = ensure_parallelism(df)
-    sig = minhash_signature(F.col(text_col), num_perm=num_perm, ngram=ngram, engine=engine)
-    with_sig = df.select(F.col(id_col).alias("__id"), sig.alias("__sig"))
     # __band_hash already folds the band index into the md5, so it IS the
     # bucket key (same construction as the DuckDB oracle's bucket).
-    banded = _banded_frame(with_sig, bands, num_perm // bands).select(
-        "__id", F.col("__band_hash").alias("__bucket")
-    )
+    banded = _banded_frame(
+        _signed(df, id_col, text_col, num_perm, ngram, engine), bands, num_perm
+    ).select("__id", F.col("__band_hash").alias("__bucket"))
     losers = _lsh_greedy_filter(banded, most_dup, df.schema[id_col].dataType)
     return df.join(
         losers.select(F.col("__loser").alias(id_col)), id_col, "left_anti"
     )
 
-
-# ---------------------------------------------------------------------------
-# SimHash
-# ---------------------------------------------------------------------------
 
 def cross_corpus_near_dups(
     corpus: DataFrame,
@@ -674,48 +743,24 @@ def cross_corpus_near_dups(
         managed_persist,
     )
 
-    rows_per_band = num_perm // bands
-
-    def side_banded(df: DataFrame, idc: str, txtc: str, persist: bool) -> DataFrame:
-        sig = minhash_signature(F.col(txtc), num_perm=num_perm, ngram=ngram, engine=engine)
-        with_sig = df.select(F.col(idc).alias("__id"), sig.alias("__sig"))
-        if persist:
-            with_sig = managed_persist(with_sig)
-        return _banded_frame(with_sig, bands, rows_per_band)
-
     corpus = ensure_parallelism(corpus)
-    cb = side_banded(corpus, id_col, text_col, persist=False)  # streams once
-    eb = side_banded(eval_df, eval_id_col, eval_text_col, persist=True).select(
-        F.col("__id").alias("__eval_id"), "__band_idx", "__band_hash"
-    )
-    if bucket_cap is not None:
-        # Census over the (small, persisted-upstream) eval banded frame;
-        # over-cap eval buckets generate no candidates.
-        bucket_sizes = eb.groupBy("__band_idx", "__band_hash").agg(
-            F.count(F.lit(1)).alias("__bc")
-        )
-        eb = eb.join(
-            bucket_sizes.filter(F.col("__bc") <= bucket_cap).select(
-                "__band_idx", "__band_hash"
-            ),
-            ["__band_idx", "__band_hash"],
-        )
+    # corpus side streams once; the (small) eval signature frame is
+    # persisted for its census and join branches.
+    cb = _banded_frame(_signed(corpus, id_col, text_col, num_perm, ngram, engine), bands, num_perm)
+    eb = _banded_frame(
+        managed_persist(_signed(eval_df, eval_id_col, eval_text_col, num_perm, ngram, engine)),
+        bands,
+        num_perm,
+    ).select(F.col("__id").alias("__eval_id"), "__band_idx", "__band_hash")
     pairs = (
-        cb.join(broadcast_if_small(eb), ["__band_idx", "__band_hash"])
+        cb.join(broadcast_if_small(_capped(eb, bucket_cap)), ["__band_idx", "__band_hash"])
         .select(F.col("__id").alias("corpus_id"), F.col("__eval_id").alias("eval_id"))
         .distinct()
     )
-    nrm_c = corpus.select(F.col(id_col).alias("corpus_id"), shingle_normalize(F.col(text_col)).alias("__nc"))
-    nrm_e = eval_df.select(F.col(eval_id_col).alias("eval_id"), shingle_normalize(F.col(eval_text_col)).alias("__ne"))
-    return (
-        pairs.join(nrm_c, "corpus_id")
-        .join(broadcast_if_small(nrm_e), "eval_id")
-        .select(
-            "corpus_id",
-            "eval_id",
-            F.round(_jaccard_kernel(ngram)(F.col("__nc"), F.col("__ne")), 6).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= F.lit(threshold))
+    return _verified(
+        pairs, ("corpus_id", corpus, id_col, text_col),
+        ("eval_id", eval_df, eval_id_col, eval_text_col),
+        ngram, engine, threshold, hint_b=True,
     )
 
 
@@ -741,11 +786,8 @@ def minhash_band_store(
     parameterizations are incompatible — joining them yields zero candidates
     SILENTLY — so consumers (:func:`incremental_minhash_dedup`) verify the
     stamp in-plan and raise instead of admitting every batch row."""
-    rows_per_band = num_perm // bands
-    sig = minhash_signature(F.col(text_col), num_perm=num_perm, ngram=ngram, engine=engine)
-    return _banded_frame(
-        df.select(F.col(id_col).alias("__id"), sig.alias("__sig")), bands, rows_per_band
-    ).select(
+    signed = _signed(df, id_col, text_col, num_perm, ngram, engine)
+    return _banded_frame(signed, bands, num_perm).select(
         "*",
         F.lit(num_perm).cast("int").alias("__num_perm"),
         F.lit(bands).cast("int").alias("__bands"),
@@ -843,64 +885,30 @@ def incremental_minhash_dedup(
         managed_persist,
     )
 
-    rows_per_band = num_perm // bands
     corpus = ensure_parallelism(corpus)
     if corpus_store is None:
         corpus_store = minhash_band_store(
             corpus, id_col, text_col, num_perm=num_perm, bands=bands, ngram=ngram, engine=engine
         )
     corpus_store = _validated_band_store(corpus_store, num_perm, bands, ngram)
-    sig = minhash_signature(F.col(batch_text_col), num_perm=num_perm, ngram=ngram, engine=engine)
     batch_sig = managed_persist(
-        batch.select(F.col(batch_id_col).alias("__id"), sig.alias("__sig"))
+        _signed(batch, batch_id_col, batch_text_col, num_perm, ngram, engine)
     )
-    bb = _banded_frame(batch_sig, bands, rows_per_band).select(
+    bb = _banded_frame(batch_sig, bands, num_perm).select(
         F.col("__id").alias("__batch_id"), "__band_idx", "__band_hash"
     )
-    if bucket_cap is not None:
-        # Template-noise guard (DEFAULT ON since r11 at DEFAULT_BUCKET_CAP;
-        # bucket_cap=None is the faithful-reference uncapped opt-out): a
-        # banding bucket with
-        # thousands of members is boilerplate mass, not near-dup signal —
-        # measured on the sf10 synthetic tier, hot buckets (top ~2.4% of
-        # the corpus EACH) drove 185M candidate pairs of which 99.99%
-        # failed exact verification, turning candidate volume quadratic in
-        # corpus size. Excluding over-cap buckets bounds per-bucket pair
-        # fan-out at cap * batch_bucket_size. Recall cost: a true near-dup
-        # pair is missed only if EVERY band it collides on is over-cap —
-        # i.e. both docs are template-saturated, the regime SCALE.md says
-        # to template-strip first. The cap is a candidate-generation knob;
-        # verification semantics are unchanged.
-        bucket_sizes = corpus_store.groupBy("__band_idx", "__band_hash").agg(
-            F.count(F.lit(1)).alias("__bc")
-        )
-        corpus_store = corpus_store.join(
-            bucket_sizes.filter(F.col("__bc") <= bucket_cap).select(
-                "__band_idx", "__band_hash"
-            ),
-            ["__band_idx", "__band_hash"],
-        )
+    # The corpus-side hot-bucket cap bounds per-bucket pair fan-out at
+    # cap * batch_bucket_size (measured law: DEFAULT_BUCKET_CAP).
     pairs = (
-        corpus_store.join(broadcast_if_small(bb), ["__band_idx", "__band_hash"])
+        _capped(corpus_store, bucket_cap)
+        .join(broadcast_if_small(bb), ["__band_idx", "__band_hash"])
         .select(F.col("__batch_id").alias("batch_id"), F.col("__id").alias("corpus_id"))
         .distinct()
     )
-    nrm_c = corpus.select(
-        F.col(id_col).alias("corpus_id"), shingle_normalize(F.col(text_col)).alias("__nc")
-    )
-    nrm_b = batch.select(
-        F.col(batch_id_col).alias("batch_id"),
-        shingle_normalize(F.col(batch_text_col)).alias("__nb"),
-    )
-    verified = (
-        pairs.join(nrm_c, "corpus_id")
-        .join(broadcast_if_small(nrm_b), "batch_id")
-        .select(
-            "batch_id",
-            "corpus_id",
-            F.round(_jaccard_kernel(ngram)(F.col("__nb"), F.col("__nc")), 6).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= F.lit(threshold))
+    verified = _verified(
+        pairs, ("corpus_id", corpus, id_col, text_col),
+        ("batch_id", batch, batch_id_col, batch_text_col),
+        ngram, engine, threshold, hint_b=True,
     )
     best = verified.groupBy("batch_id").agg(
         F.max(F.struct(F.col("jaccard"), (-F.col("corpus_id")).alias("__neg_id"))).alias("__m")
@@ -916,6 +924,10 @@ def incremental_minhash_dedup(
         )
     )
 
+
+# ---------------------------------------------------------------------------
+# SimHash
+# ---------------------------------------------------------------------------
 
 def simhash(text: Column, bits: int = 32, ngram: int = 3, engine: str = "arrow") -> Column:
     """SimHash fingerprint as a BIGINT built from ``bits`` bit-votes.
@@ -1423,21 +1435,16 @@ def lsh_bucket_stats(
     """
     from instructionspipe_spark.session import ensure_parallelism
 
-    d = ensure_parallelism(df)
-    sig = minhash_signature(F.col(text_col), num_perm=num_perm, ngram=ngram, engine=engine)
-    with_sig = d.select(F.col(id_col).alias("__id"), sig.alias("__sig"))
-    banded = _banded_frame(with_sig, bands, num_perm // bands)
-    sizes = banded.groupBy("__band_idx", "__band_hash").agg(
-        F.count(F.lit(1)).alias("n_docs")
-    )
-    w = Window.partitionBy("__band_idx").orderBy(F.desc("n_docs"), F.asc("__band_hash"))
+    signed = _signed(ensure_parallelism(df), id_col, text_col, num_perm, ngram, engine)
+    sizes = _bucket_sizes(_banded_frame(signed, bands, num_perm))
+    w = Window.partitionBy("__band_idx").orderBy(F.desc("__bc"), F.asc("__band_hash"))
     return (
         sizes.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= top_k)
         .select(
             F.col("__band_idx").alias("band_idx"),
             F.col("__band_hash").alias("band_hash"),
-            "n_docs",
+            F.col("__bc").alias("n_docs"),
             "rank",
         )
     )

@@ -411,8 +411,8 @@ def streaming_band_matches(
     deliberately not forced here); consumers needing set semantics
     exact-dedup downstream.
 
-    Append-mode-safe BY CONSTRUCTION: per-row signature/banding (Arrow
-    kernel + explode), two stream-static equi-joins (band bucket, then the
+    Append-mode-safe BY CONSTRUCTION: per-row signature/banding (one
+    projection + explode), two stream-static equi-joins (band bucket, then the
     corpus text for verification), and a per-row jaccard filter — no
     streaming aggregation, no watermark requirement, so it composes with
     any downstream sink mode. Best-match election (the batch operator's
@@ -425,87 +425,38 @@ def streaming_band_matches(
     across sides; the per-batch cost is the batch's own signatures plus
     candidate verification, never a corpus re-scan."""
     from instructionspipe_spark.operators.dedup import (
-        _jaccard_kernel,
+        _banded_frame,
+        _signed,
         _validated_band_store,
-        minhash_signature,
+        _verified,
+        _verify_repr,
     )
-    from instructionspipe_spark.functions.text import shingle_normalize
 
     corpus_id_col = corpus_id_col or id_col
     corpus_text_col = corpus_text_col or text_col
     corpus_store = _validated_band_store(corpus_store, num_perm, bands, ngram)
-    rows_per_band = num_perm // bands
-    sig = minhash_signature(F.col(text_col), num_perm=num_perm, ngram=ngram, engine=engine)
-    # Banding inlined (not _banded_frame) so the normalized text rides along:
-    # re-deriving it via a second join back to stream_df would be a
-    # stream-STREAM join, which demands watermarks. Same stage discipline —
-    # explode the cheap band index, hash the slice per exploded row.
-    base = stream_df.select(
-        F.col(id_col).alias("__stream_id"),
-        shingle_normalize(F.col(text_col)).alias("__ns"),
-        sig.alias("__sig"),
+    # The stream side's verification form rides through banding as
+    # __v__id: re-deriving it via a second join back to stream_df would be
+    # a stream-STREAM join, which demands watermarks.
+    ride = _verify_repr(F.col(text_col), ngram, engine).alias("__v__id")
+    signed = _signed(stream_df, id_col, text_col, num_perm, ngram, engine, ride)
+    # Micro-batch parallelism: the stream side inherits the SOURCE's
+    # partitioning (a 1-file batch = 1 partition), and the stream-static
+    # joins below broadcast the static side — without this shuffle every
+    # candidate verification of the batch lands on ONE task (measured
+    # 28s -> 3.6s at sf0.1 on the dense-law corpus). Band hashes are md5:
+    # uniform keys, no skew.
+    banded = _banded_frame(signed, bands, num_perm).repartition(
+        stream_df.sparkSession.sparkContext.defaultParallelism, "__band_idx", "__band_hash"
     )
-    banded = (
-        base.select(
-            "__stream_id",
-            "__ns",
-            "__sig",
-            F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("__band_idx"),
-        )
-        .select(
-            "__stream_id",
-            "__ns",
-            "__band_idx",
-            F.md5(
-                F.concat(
-                    F.col("__band_idx").cast("string"),
-                    F.lit("|"),
-                    F.array_join(
-                        F.transform(
-                            F.slice(
-                                F.col("__sig"),
-                                F.col("__band_idx") * rows_per_band + 1,
-                                rows_per_band,
-                            ),
-                            lambda v: v.cast("string"),
-                        ),
-                        ",",
-                    ),
-                )
-            ).alias("__band_hash"),
-        )
-        .filter(F.col("__band_hash").isNotNull())
-        # Micro-batch parallelism: the stream side inherits the SOURCE's
-        # partitioning (a 1-file batch = 1 partition), and the stream-static
-        # joins below broadcast the static side — without this shuffle every
-        # candidate verification of the batch lands on ONE task (measured
-        # 28s -> 3.6s at sf0.1 on the dense-law corpus). Band hashes are
-        # md5: uniform keys, no skew.
-        .repartition(
-            stream_df.sparkSession.sparkContext.defaultParallelism,
-            "__band_idx",
-            "__band_hash",
-        )
+    pairs = banded.join(
+        corpus_store.select(F.col("__id").alias("__corpus_id"), "__band_idx", "__band_hash"),
+        ["__band_idx", "__band_hash"],
     )
-    nrm_c = corpus.select(
-        F.col(corpus_id_col).alias("__corpus_id"),
-        shingle_normalize(F.col(corpus_text_col)).alias("__nc"),
-    )
-    return (
-        banded.join(
-            corpus_store.select(
-                F.col("__id").alias("__corpus_id"), "__band_idx", "__band_hash"
-            ),
-            ["__band_idx", "__band_hash"],
-        )
-        .join(nrm_c, "__corpus_id")
-        .select(
-            F.col("__stream_id").alias(id_col),
-            F.col("__corpus_id").alias("dup_of"),
-            F.round(_jaccard_kernel(ngram)(F.col("__ns"), F.col("__nc")), 6).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= F.lit(threshold))
-    )
+    return _verified(
+        pairs, ("__corpus_id", corpus, corpus_id_col, corpus_text_col), ("__id", None, None, None),
+        ngram, engine, threshold,
+    ).select(F.col("__id").alias(id_col), F.col("__corpus_id").alias("dup_of"), "jaccard")
 
 
 def stream_interval_join(

@@ -1014,6 +1014,101 @@ def test_incremental_minhash_dedup(spark, tmp_path):
     release_persisted()
 
 
+@pytest.mark.parametrize("num_perm,bands", [(4, 8), (16, 0)])
+@pytest.mark.parametrize(
+    "op",
+    ["minhash_lsh_dedup", "minhash_band_store", "incremental_minhash_dedup", "streaming_band_matches"],
+)
+def test_banding_rejects_bands_outside_num_perm(spark, tmp_path, op, num_perm, bands):
+    """More bands than permutations leaves zero signature rows per band:
+    every band hash would be md5("<b>|"), every document would share every
+    bucket, and three unrelated texts would dedup to one. Every banded
+    operator rejects it (and bands < 1) when the plan is built, naming both
+    values."""
+    from instructionspipe_spark.operators.dedup import (
+        incremental_minhash_dedup,
+        minhash_band_store,
+        minhash_lsh_dedup,
+    )
+    from instructionspipe_spark.streaming.jobs import streaming_band_matches
+
+    docs = spark.createDataFrame(
+        [
+            (1, "alpine botany and glacier meltwater chemistry"),
+            (2, "catalyst optimizer rules and whole stage code generation"),
+            (3, "a recipe for sourdough bread with a long cold proof"),
+        ],
+        ["doc_id", "text"],
+    )
+    kw = {"num_perm": num_perm, "bands": bands}
+    build = {
+        "minhash_lsh_dedup": lambda: minhash_lsh_dedup(docs, "doc_id", "text", **kw),
+        "minhash_band_store": lambda: minhash_band_store(docs, "doc_id", "text", **kw),
+        "incremental_minhash_dedup": lambda: incremental_minhash_dedup(
+            docs, docs, "doc_id", "text", **kw
+        ),
+        "streaming_band_matches": lambda: streaming_band_matches(
+            spark.readStream.schema(docs.schema).json(str(tmp_path)),
+            docs,
+            minhash_band_store(docs, "doc_id", "text"),
+            "doc_id",
+            "text",
+            **kw,
+        ),
+    }[op]
+    with pytest.raises(ValueError, match=f"bands={bands}, num_perm={num_perm}"):
+        build()
+
+
+@pytest.mark.parametrize("op", ["incremental_minhash_dedup", "cross_corpus_near_dups"])
+def test_expr_engine_runs_without_python_workers(spark, op):
+    """engine="expr" signs AND verifies with Catalyst expressions: the
+    executed plan has no Python evaluation node, and the rows equal the
+    Arrow engine's."""
+    from instructionspipe_spark.operators import dedup
+    from instructionspipe_spark.session import release_persisted
+
+    base = (
+        "the quick brown fox jumps over the lazy dog and keeps on running "
+        "through the quiet green field toward the river bend every morning"
+    )
+    corpus = spark.createDataFrame(
+        [
+            (1, base),
+            (2, base.replace("morning", "evening")),
+            (3, "catalyst optimizer rules and whole stage code generation in "
+                "distributed sql engines at terabyte scale"),
+        ],
+        ["doc_id", "text"],
+    )
+    batch = spark.createDataFrame(
+        [
+            (101, base),
+            (102, base.replace("quiet", "silent")),
+            (103, "alpine botany and glacier meltwater chemistry"),
+            (104, ""),
+        ],
+        ["doc_id", "text"],
+    )
+
+    def run(engine):
+        df = getattr(dedup, op)(corpus, batch, "doc_id", "text", engine=engine)
+        rows = sorted(tuple(r) for r in df.collect())
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        release_persisted()
+        return rows, plan
+
+    arrow_rows, arrow_plan = run("arrow")
+    expr_rows, expr_plan = run("expr")
+    # the plan string reaches into persisted frames: the Arrow run's
+    # Python hops are visible, so their absence below is meaningful
+    assert "ArrowEvalPython" in arrow_plan
+    assert "ArrowEvalPython" not in expr_plan, expr_plan
+    assert "BatchEvalPython" not in expr_plan, expr_plan
+    assert expr_rows == arrow_rows
+    assert any(r[2] is not None and r[2] >= 0.5 for r in expr_rows)  # a verified match exists
+
+
 def test_pq_codes_store_roundtrip(spark, tmp_path):
     """The persisted-codes path: encode once, write codebook + codes to
     parquet, score from the stored frames — results identical to the

@@ -472,6 +472,20 @@ def test_streaming_band_matches_vs_batch(spark, tmp_path):
     for doc_id, dup_of, jac in got:
         assert jac == verdicts[doc_id]["jaccard"]
 
+    # A store signed with other parameters fails the stream, as it fails
+    # the batch operator, instead of silently admitting every document.
+    bad_path = str(tmp_path / "store32.parquet")
+    minhash_band_store(corpus, "doc_id", "text", num_perm=32, bands=8).write.parquet(bad_path)
+    bad = streaming_band_matches(
+        read_jsonl_stream(spark, src, schema, max_files_per_trigger=1),
+        corpus,
+        spark.read.parquet(bad_path),
+        "doc_id",
+        "text",
+    )
+    with pytest.raises(Exception, match="parameter mismatch"):
+        _run_to_memory(bad, "t_band_mismatch")
+
 
 def test_stream_interval_join_cross_batch(spark, tmp_path):
     """Stream-stream interval join: an in-batch pair AND a pair whose click

@@ -10,6 +10,7 @@ reuse the suite's configured session — so the contract test shells out.
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
@@ -24,7 +25,7 @@ SF_DIR = "/root/testdata/sf0.001"
 # and the newly-gated deterministic IVF.
 _PROBE = """
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, REPO)
 from pyspark.sql import SparkSession
 
 spark = SparkSession.builder.master("local[2]").appName("vanilla-probe").getOrCreate()
@@ -67,7 +68,8 @@ print("FUZZ_VANILLA_OK")
 
 
 def test_gated_queries_on_bare_session():
-    probe = f"SF_DIR = {SF_DIR!r}\n" + _PROBE
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    probe = f"SF_DIR = {SF_DIR!r}\nREPO = {repo!r}\n" + _PROBE
     proc = subprocess.run(
         [sys.executable, "-c", probe],
         capture_output=True,
